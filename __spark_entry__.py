@@ -2,7 +2,7 @@
 
 ``entry``: flagship end-to-end extraction — the Common-Crawl-style pages
 corpus (plus sf0.001 ``documents`` wrapped as HTML payloads) run through the
-salted, size-bucketed extraction pipeline, summarized per language.
+url-hash-shuffled extraction pipeline, summarized per language.
 
 ``queries``/``oracle_sql``: the operator registry lives in
 :mod:`markmuse_spark.queries` — exactly 50 exported entries (the driver's
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: extract Markdown from a mixed HTML/PDF corpus + the
-    sf0.001 documents table, via the skew-aware pipeline operator."""
+    sf0.001 documents table, via the pipeline's url-hash shuffle."""
     from markmuse_spark.operators.extract import extract_markdown
     from markmuse_spark.plans.pipeline import salted_repartition
     from markmuse_spark.sources import corpus

@@ -3,7 +3,7 @@
 Invoked by ``bench.py`` via ``spark-submit --py-files <pkg.zip>`` (the
 submission path the north rule mandates), once per cluster-size stand-in
 (``local[N]`` and ``local[4N]`` pinned to disjoint core sets).  Reads the
-shared bench corpus, runs the salted size-aware extraction ``--passes``
+shared bench corpus, runs the extraction ``--passes``
 times after one warm-up, forcing full materialization with an aggregate
 (no output IO so the measurement is compute + shuffle).  Prints one JSON
 line::
@@ -161,7 +161,7 @@ def main() -> None:
                     "measured windows cover ~equal WALL TIME and see the "
                     "same share of host-capacity drift")
     ap.add_argument("--shuffle", action="store_true",
-                    help="force the salted repartition ahead of extraction")
+                    help="force the url-hash repartition ahead of extraction")
     ap.add_argument("--turn-dir", default=None,
                     help="marker-file dir for interleaved turn-taking")
     ap.add_argument("--role", default=None, choices=["small", "big"],
@@ -188,7 +188,7 @@ def main() -> None:
         .config("spark.sql.parquet.columnarReaderBatchSize", "4096")
         # byte-range splits are the size-aware partitioning: equal-byte
         # scan tasks load-balance a byte-proportional kernel without an
-        # extra shuffle of the full payload (see plans.pipeline docstring)
+        # extra shuffle of the full payload
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")

@@ -40,8 +40,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--master", default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--big-bytes", type=int, default=None,
-                    help="size threshold for dedicated shuffle slots")
     ap.add_argument("--captions", default=None,
                     help="enhanced mode (A11): parquet path of (url, img_id, "
                          "description), or 'fake' for the deterministic "
@@ -76,20 +74,18 @@ def main(argv: list[str] | None = None) -> int:
                 done = pipeline.committed_urls(spark, args.output)
                 if done is not None:
                     images_todo = images_todo.join(done, "url", "left_anti")
-        kwargs = {}
-        if args.big_bytes is not None:
-            kwargs["big_bytes"] = args.big_bytes
+        captions = None
         if args.captions:
             from markmuse_spark.operators.extract import deterministic_captions
 
-            kwargs["captions"] = (
+            captions = (
                 deterministic_captions(pages)
                 if args.captions == "fake"
                 else spark.read.parquet(args.captions)
             )
         job = pipeline.run_extraction(
             spark, pages, args.output, args.run_id,
-            resume=not args.no_resume, **kwargs,
+            resume=not args.no_resume, captions=captions,
         )
         if args.images_output:
             from markmuse_spark.operators.extract import extract_images

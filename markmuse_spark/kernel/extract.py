@@ -1,8 +1,8 @@
 """Unified extraction kernel: payload bytes -> assembled Markdown document.
 
-Per-document composition of the three kernel stages (the Spark operator in
-:mod:`markmuse_spark.operators.extract` calls the batch entry point from a
-``mapInPandas`` iterator):
+Per-document composition of the three kernel stages (the Spark operators in
+:mod:`markmuse_spark.operators.extract` call :func:`extract_document` per
+row from a ``mapInArrow`` iterator):
 
 1. dispatch on payload magic: ``%PDF`` -> PDF box-geometry extractor,
    otherwise HTML boilerplate-strip extractor

@@ -49,22 +49,23 @@ def _decode_image(b64: str) -> Optional[tuple[str, bytes]]:
     else:
         content_type = "image/png"
         payload = b64
-    # b64decode itself discards whitespace (and any non-alphabet byte)
-    # before decoding, so the explicit cleanup changes nothing on the
-    # success path — build ``cleaned`` only when the padding-repair
-    # branch needs its whitespace-free length (round-8: the
-    # unconditional split/join copied every image payload once)
+    # b64decode itself discards ASCII whitespace (and any non-alphabet
+    # byte) before decoding, so the reference's explicit cleanup only
+    # matters when the fast decode fails: a str holding non-ASCII
+    # whitespace (U+00A0 from an unescaped &nbsp;) is rejected outright,
+    # and the whitespace-free form must be decoded before the
+    # padding-repair branch, exactly as the reference orders them
     try:
         data = _B64(payload)
     except Exception:
         cleaned = "".join(payload.split())
-        rem = len(cleaned) % 4
-        if not rem:
-            return None
         try:
-            data = _B64(cleaned + "=" * (4 - rem))
+            data = _B64(cleaned)
         except Exception:
-            return None
+            try:
+                data = _B64(cleaned + "=" * (-len(cleaned) % 4))
+            except Exception:
+                return None
     if len(data) < 100:
         return None
     return content_type, data

@@ -35,6 +35,8 @@ stay JVM-side.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -100,10 +102,9 @@ def _default_parallelism(spark) -> int:
 #: Scale-adaptive by construction: width grows linearly with input
 #: bytes until it hits the cluster's parallelism, and genuinely wide
 #: inputs never reach the repartition at all (the provably-wide
-#: early-out).  Env-tunable for hosts whose per-task overhead differs.
-_UDF_SPLIT_BYTES = int(
-    __import__("os").environ.get("MARKMUSE_UDF_SPLIT_BYTES", str(256 * 1024))
-)
+#: early-out).  ``$MARKMUSE_UDF_SPLIT_BYTES`` overrides it, read on each
+#: call, for hosts whose per-task overhead differs.
+_UDF_SPLIT_BYTES = 256 * 1024
 
 
 def _parallelize_for_udf(df: DataFrame, width: "int | None" = None) -> DataFrame:
@@ -191,7 +192,8 @@ def _parallelize_for_udf(df: DataFrame, width: "int | None" = None) -> DataFrame
     # partitions paid ~0.9 s of dispatch/Arrow overhead for ~0.12 s of
     # UDF work.  Width still reaches ``target`` as soon as the input is
     # big enough to keep every core busy, so nothing changes at scale.
-    width = min(target, max(1, -(-total_bytes // _UDF_SPLIT_BYTES)))
+    split_bytes = int(os.environ.get("MARKMUSE_UDF_SPLIT_BYTES", _UDF_SPLIT_BYTES))
+    width = min(target, max(1, -(-total_bytes // split_bytes)))
     # the packing formula over-counts open-cost-dominated (tiny-file)
     # scans — a single small file reads as 2 partitions when Spark packs
     # it into 1; bound the estimate by the file count (tiny files pack

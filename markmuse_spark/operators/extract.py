@@ -11,7 +11,7 @@ arrow -> python bytes -> kernel -> arrow with no intermediate pandas
 DataFrame, saving one full materialization of the multi-KB binary column in
 each direction per batch — measurable at 10^5 docs/core, decisive at 10^12.
 
-Plan shape (verified in tests via ``explain``): scan -> (optional salted
+Plan shape (verified in tests via ``explain``): scan -> (optional url-hash
 exchange; see plans.pipeline) -> ArrowEvalPython/mapInArrow -> sink.
 """
 
@@ -242,18 +242,13 @@ def extract_markdown_enhanced(
     captions take the left-outer path (nothing enhanced, refs verbatim).
 
     ``salt_parallelism``: when set, the JOINED frame is re-shuffled with
-    the same size-aware salted slot rule the plain path uses (giant
-    payloads get a slot of their own, small docs share
-    ``4 * salt_parallelism`` salted slots) so one 100 MB payload cannot
-    straggle the caption join's url-hash partitioning.  This is a SECOND
-    shuffle on top of the join's — MEASURED on the adversarial corpus
-    (20k docs, ~100x-median stragglers at 0.1% frequency, local[8]):
-    plain join 2.6-3.0 s vs salted 3.4 s, i.e. the extra shuffle costs
-    ~25% and buys nothing at this skew (each url-hash partition holds
-    thousands of docs, so one 100x doc adds only ~5% to its partition).
-    Default off; enable when single payloads approach a partition's
-    whole compute budget (payload_bytes x docs_per_partition skew math,
-    not this corpus's)."""
+    the url-hash repartition the plain path uses
+    (:func:`markmuse_spark.plans.pipeline.salted_repartition`), which
+    fixes the extraction pass's task count independently of the join's
+    shuffle width.  This is a SECOND shuffle on top of the join's; with
+    the earlier size-salted rule it was measured on the adversarial
+    corpus (20k docs, local[8]) at 3.4 s vs 2.6-3.0 s for the plain
+    join.  Default off."""
     import pyarrow as pa
 
     from pyspark.sql import functions as F
@@ -283,9 +278,7 @@ def extract_markdown_enhanced(
     if salt_parallelism is not None:
         from markmuse_spark.plans.pipeline import salted_repartition
 
-        joined = salted_repartition(
-            joined, salt_parallelism, payload_col=payload_col, url_col=url_col
-        )
+        joined = salted_repartition(joined, salt_parallelism, url_col=url_col)
 
     def run(batches):
         from pyspark import TaskContext

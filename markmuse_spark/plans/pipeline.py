@@ -1,27 +1,27 @@
-"""The full extraction job: resume -> skew-aware shuffle -> extract ->
+"""The full extraction job: resume -> url-hash shuffle -> extract ->
 atomic publish -> lineage/metrics sidecar.
 
 Spark-first re-expression of the reference's control plane:
 
 * **resume anti-join** (A21, ``task_api/routes.py:144-154`` analog):
   previously committed urls are excluded before any payload is read
-* **salted size-aware repartition** (SURVEY §4 custom item 1): every row
-  gets a shuffle *slot*; small docs share ``oversub * parallelism`` salted
-  slots keyed on ``xxhash64(url)``, giant docs (>= ``big_bytes``) each get
-  their own slot so a 100 MB PDF never queues thousands of small pages
-  behind it — AQE's skew handling only covers shuffle joins, not UDF
-  compute skew, so this is explicit
+* **url-hash repartition**: ``TASKS_PER_CORE * parallelism`` partitions
+  keyed on url.  Every Python-worker task carries a fixed start-up cost
+  (pyspark re-reads its zip imports on each task), so the task count is
+  kept at the low end of Spark's 2-3 tasks-per-core guidance: enough
+  slack for the scheduler when per-doc cost is skewed, few enough that
+  task start-up does not rival the kernel on small inputs
 * **atomic publish**: each run writes ``extracted/run_id=<id>/`` through
   Spark's committer; a run directory counts as committed only when its
   ``_SUCCESS`` marker exists (Hadoop commit-protocol semantics — the
   sandbox stand-in for an Iceberg snapshot commit)
 * **lineage sidecar** (A20, ``clients/db/crud.py:134-320`` analog): one row
   per executor partition with url/ok/err counts plus a job-level row,
-  appended under ``extraction_runs/``
+  appended under ``extraction_runs/`` from an Arrow local relation (no
+  Python-worker tasks for a table of a few dozen rows)
 
 At 10^12-document scale every stage here is a single pass: no double scan
-of the source (the size split is a projected column, not a re-filter), no
-driver-side collection of payloads.
+of the source, no driver-side collection of payloads.
 """
 
 from __future__ import annotations
@@ -31,13 +31,21 @@ import json
 import os
 from typing import Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from markmuse_spark.operators.extract import PartitionMetricsParam, extract_markdown
 
-DEFAULT_BIG_BYTES = 256 * 1024
-DEFAULT_OVERSUB = 4
+#: shuffle partitions per core for the extraction pass (see module doc)
+TASKS_PER_CORE = 2
+
+#: the ``extraction_runs`` lineage sidecar's columns
+RUNS_SCHEMA = (
+    "run_id string, partition_id int, status string, url_count long, "
+    "ok_count long, err_count long, started_at timestamp, "
+    "completed_at timestamp, error_message string, metrics string"
+)
 
 
 def committed_urls(
@@ -133,25 +141,12 @@ def committed_urls(
 
 
 def salted_repartition(
-    pages: DataFrame,
-    parallelism: int,
-    big_bytes: int = DEFAULT_BIG_BYTES,
-    oversub: int = DEFAULT_OVERSUB,
-    payload_col: str = "html",
-    url_col: str = "url",
+    pages: DataFrame, parallelism: int, url_col: str = "url"
 ) -> DataFrame:
-    """One-pass skew-aware shuffle.
-
-    ``slot`` is the shuffle key: small docs -> ``pmod(xxhash64(url),
-    small_slots)`` (salted, uniform); giant docs -> full ``xxhash64(url)``
-    (a unique slot each, so no partition accumulates more than one giant
-    plus its hash-share of small docs).
-    """
-    small_slots = max(1, parallelism * oversub)
-    slot = F.when(
-        F.length(F.col(payload_col)) >= big_bytes, F.xxhash64(F.col(url_col))
-    ).otherwise(F.pmod(F.xxhash64(F.col(url_col)), F.lit(small_slots)))
-    return pages.withColumn("_slot", slot).repartition(small_slots, "_slot").drop("_slot")
+    """Hash-partition ``pages`` on url into ``TASKS_PER_CORE *
+    parallelism`` partitions: one shuffle, rows spread evenly, and each
+    url's placement a pure function of the url."""
+    return pages.repartition(TASKS_PER_CORE * parallelism, url_col)
 
 
 def run_extraction(
@@ -159,8 +154,6 @@ def run_extraction(
     pages: DataFrame,
     output_dir: str,
     run_id: str,
-    big_bytes: int = DEFAULT_BIG_BYTES,
-    oversub: int = DEFAULT_OVERSUB,
     resume: bool = True,
     resume_source: str = "listing",
     iceberg_table: Optional[str] = None,
@@ -176,15 +169,13 @@ def run_extraction(
     ``captions``: optional ``(url, img_id, description)`` DataFrame — the
     A11 enhanced mode (the reference's ``--enhance-images``, with the LLM
     replaced by this injected caption table).  The enhanced path joins
-    captions on url, which supplies the shuffle, so the salted
-    repartition is skipped there — a MEASURED trade, not an oversight:
-    on the adversarial corpus (20k docs, ~100x-median stragglers at
-    0.1% frequency, local[8]) adding the salted re-shuffle after the
-    join read 3.4 s vs 2.6-3.0 s without, i.e. the second shuffle costs
-    ~25% and the straggler isolation buys nothing at this skew (a 100x
-    doc adds ~5% to a thousands-of-docs hash partition).  For heavier
-    skew, ``extract_markdown_enhanced(salt_parallelism=...)`` turns the
-    post-join salt on."""
+    captions on url, which already hash-partitions the rows, so the
+    url-hash repartition is skipped there: a second shuffle of the same
+    rows only re-spreads them (with the earlier size-salted rule,
+    measured on the adversarial corpus, 20k docs, local[8]: 3.4 s with
+    it vs 2.6-3.0 s without).
+    ``extract_markdown_enhanced(salt_parallelism=...)`` still adds it
+    for callers that want a fixed task count after the join."""
     started_at = _dt.datetime.now(_dt.timezone.utc)
     parallelism = spark.sparkContext.defaultParallelism
 
@@ -203,7 +194,7 @@ def run_extraction(
 
         result = extract_markdown_enhanced(todo, captions, metrics_acc=metrics_acc)
     else:
-        shuffled = salted_repartition(todo, parallelism, big_bytes, oversub)
+        shuffled = salted_repartition(todo, parallelism)
         result = extract_markdown(shuffled, metrics_acc=metrics_acc)
 
     run_path = os.path.join(output_dir, "extracted", f"run_id={run_id}")
@@ -284,14 +275,13 @@ def run_extraction(
         job_row["err_count"] = sum(m["err_count"] for m in per_part.values())
     metrics_rows.append(job_row)
 
-    runs_schema = (
-        "run_id string, partition_id int, status string, url_count long, "
-        "ok_count long, err_count long, started_at timestamp, "
-        "completed_at timestamp, error_message string, metrics string"
+    # an Arrow table becomes a local relation, so the append runs no
+    # Python worker (a list of dicts would ship through a Python RDD)
+    spark.createDataFrame(
+        pa.Table.from_pylist(metrics_rows), schema=RUNS_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(
+        os.path.join(output_dir, "extraction_runs")
     )
-    spark.createDataFrame(metrics_rows, schema=runs_schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(output_dir, "extraction_runs"))
 
     if status == "FAILURE":
         raise RuntimeError(f"extraction run {run_id} failed: {error_message}")

@@ -107,6 +107,33 @@ def test_padding_repair_and_reject():
     assert want == got == "![a](doc_images/u.png)\n\n![b](s.png)"
 
 
+def test_non_ascii_whitespace_in_payload():
+    # U+00A0 (an unescaped &nbsp;) makes b64decode reject the str; the
+    # whitespace-free payload still decodes, padded or not, and a
+    # non-ASCII non-space character still drops the image
+    nbsp = _OK[:40] + " " + _OK[40:]
+    unpadded = nbsp.rstrip("=") + " \n"
+    alien = _OK[:40] + "é" + _OK[40:]
+    pages = [
+        {
+            "page_idx": 0,
+            "markdown": "![a](n.png)\n\n![b](u.png)\n\n![c](e.png)",
+            "images": [
+                {"id": "n.png", "image_base64": nbsp},
+                {"id": "u.png", "image_base64": "data:image/gif;base64," + unpadded},
+                {"id": "e.png", "image_base64": alien},
+            ],
+        }
+    ]
+    want = oracle.assemble_document("https://x.example/a/doc.pdf", pages)
+    got = kernel.assemble_one("https://x.example/a/doc.pdf", pages)
+    assert got == want
+    assert got["markdown"] == (
+        "![a](doc_images/n.png)\n\n![b](doc_images/u.png)\n\n![c](e.png)"
+    )
+    assert [m["n_bytes"] for m in got["image_manifest"]] == [120, 120]
+
+
 def test_data_uri_content_type_and_manifest():
     pages = [
         {

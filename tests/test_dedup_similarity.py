@@ -612,7 +612,7 @@ def test_parallelize_for_udf_widens_without_rdd_probe(spark, tmp_path, monkeypat
         m.setattr(DataFrame, "rdd", property(_trap))
         # split=1 byte: any probed size merits full width (the round-8
         # size-aware rule otherwise keeps a KB-scale scan narrow)
-        m.setattr(dedup, "_UDF_SPLIT_BYTES", 1)
+        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", "1")
         wide = dedup._parallelize_for_udf(df)
         wide_local = dedup._parallelize_for_udf(local)
     target = spark.sparkContext.defaultParallelism
@@ -641,12 +641,12 @@ def test_parallelize_for_udf_width_is_size_aware(spark, tmp_path, monkeypatch):
     target = spark.sparkContext.defaultParallelism
     # split sized so the expected width is 2 (> scan's 1, < target)
     with monkeypatch.context() as m:
-        m.setattr(dedup, "_UDF_SPLIT_BYTES", max(1, (nbytes + 1) // 2))
+        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", str(max(1, (nbytes + 1) // 2)))
         sized = dedup._parallelize_for_udf(df)
     assert sized.rdd.getNumPartitions() == 2
     # huge split: the scan's own width already covers the data — no shuffle
     with monkeypatch.context() as m:
-        m.setattr(dedup, "_UDF_SPLIT_BYTES", 10 * nbytes)
+        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", str(10 * nbytes))
         untouched = dedup._parallelize_for_udf(df)
     assert untouched.rdd.getNumPartitions() == df.rdd.getNumPartitions()
     # explicit hint wins, capped at parallelism
@@ -685,7 +685,7 @@ def test_parallelize_probe_is_pure_python_for_file_uris(
             raising=False,
         )
         sizes = dedup._probe_file_sizes(df.inputFiles(), spark)
-        m.setattr(dedup, "_UDF_SPLIT_BYTES", 1)  # any size -> full width
+        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", "1")  # any size -> full width
         wide = dedup._parallelize_for_udf(df)
     assert sizes is not None and len(sizes) >= 1 and sizes[0] > 0
     assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
