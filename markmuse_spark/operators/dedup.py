@@ -1,16 +1,17 @@
 """Deduplication operators for the training-data pipeline.
 
-Four families, all DataFrame-native where possible (JVM-side expressions,
-no Python in the hot path except the bit-twiddling SimHash reducer which is
-a vectorized numpy pandas-UDF):
+Four families, all DataFrame-native where possible (JVM-side expressions;
+Python only where the JVM form is interpreted — shingling, MinHash and
+SimHash run as vectorized-numpy Arrow passes):
 
 * :func:`exact_duplicates` — hash-groupBy on normalized text
 * :func:`ngram_jaccard_pairs` — exact n-gram Jaccard via an inverted-index
   self-join (shuffle on shingle); the DuckDB-oracled ground truth
-* :func:`minhash_lsh_pairs` — MinHash signatures (k xxhash64 permutations,
-  computed as JVM array expressions) -> banded LSH candidate generation ->
-  exact-Jaccard verification of candidates only.  The scale path: at 10^12
-  docs the candidate join shuffles signatures (KBs/doc), never text.
+* :func:`minhash_lsh_pairs` — one ``mapInArrow`` pass computes shingles,
+  MinHash signatures (k permutations of an XXH64 base hash) and the
+  per-band LSH keys -> banded candidate generation -> exact-Jaccard
+  verification of candidates only.  The scale path: at 10^12 docs the
+  candidate join shuffles band keys (bytes/doc), never text.
 * :func:`simhash` / :func:`simhash_near_pairs` — 64-bit SimHash with
   banded Hamming-distance candidate generation
 
@@ -19,24 +20,26 @@ shingles appear everywhere); ``max_df`` drops shingles occurring in more
 than a fraction of documents before the join — the standard inverted-index
 frequency cap.
 
-Hashing: shingle base hashes are ``xxhash64`` (JVM, deterministic across
-executors/runs); MinHash permutations are seeded multiply-add bijections
-over Z_2^64 in vectorized numpy; SimHash feature hashes are md5-derived
-(hashlib == DuckDB == Spark, so the output is independently oracle-able).
+Hashing: shingle base hashes are XXH64 seed 42 in vectorized numpy
+(:mod:`markmuse_spark.operators.xxh64`, bit-identical to Spark's
+``xxhash64``, deterministic across executors/runs); MinHash permutations
+are seeded multiply-add bijections over Z_2^64; SimHash feature hashes
+are md5-derived (hashlib == DuckDB == Spark, so the output is
+independently oracle-able).
 
 A round-2 measurement note that shapes this module: Spark higher-order
 -function expressions (transform/aggregate/filter lambdas) are INTERPRETED
 — never whole-stage-codegen'd — so shingling and per-permutation array
 math as JVM expressions cost milliseconds per document.  The hot paths
-here therefore run as Arrow-batched pandas UDFs (3-8x faster measured),
-while joins, grouping, banding keys, and verification set-intersections
-stay JVM-side.
+here therefore run as Arrow-batched Python passes (3-8x faster measured),
+while joins, grouping and verification set-intersections stay JVM-side.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,23 +49,7 @@ from markmuse_spark.operators.similarity import (
     _drop_oversized_buckets,
     _observe_oversized_buckets,
 )
-
-
-def tokens_expr(text_col: str = "text"):
-    """Lowercased whitespace tokens, empties removed (shared definition)."""
-    return F.filter(F.split(F.lower(F.col(text_col)), " "), lambda x: x != "")
-
-
-def shingles_expr(text_col: str = "text", n: int = 3):
-    """Distinct word n-gram shingles as an array column (JVM-side)."""
-    t = tokens_expr(text_col)
-    make = F.transform(
-        F.sequence(F.lit(1), F.size(t) - (n - 1)),
-        lambda i: F.concat_ws(" ", *[F.element_at(t, i + j) for j in range(n)]),
-    )
-    return F.when(F.size(t) >= n, F.array_distinct(make)).otherwise(
-        F.array().cast("array<string>")
-    )
+from markmuse_spark.operators.xxh64 import xxh64
 
 
 def normalized_fingerprint(text_col: str = "text"):
@@ -248,50 +235,130 @@ def _probe_file_sizes(files: list[str], spark) -> "list[int] | None":
     return sizes
 
 
+#: seed of the MinHash permutation family (multipliers and offsets)
+_MINHASH_SEED = 12345
+
+
+def _shingle_batch(texts, n: int):
+    """Shingle one batch of documents: lower, split on ' ', drop empty
+    tokens, ``' '``-joined word n-grams, distinct in first-occurrence
+    order — the semantics the d_ngram_jaccard DuckDB oracle pins.
+    Documents with no shingle (NULL, or fewer than ``n`` tokens) are
+    dropped here, not by a later filter.
+
+    Returns ``(kept row indices, list offsets, flat shingles)``: the
+    parts of an Arrow list column over the kept rows."""
+    keep: list = []
+    offsets = [0]
+    flat: list = []
+    for i, t in enumerate(texts):
+        if t is None:
+            continue
+        toks = [w for w in t.lower().split(" ") if w]
+        if len(toks) < n:
+            continue
+        flat.extend(
+            dict.fromkeys(" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1))
+        )
+        keep.append(i)
+        offsets.append(len(flat))
+    return keep, offsets, flat
+
+
+def _minhash(values, offsets, num_perm: int) -> np.ndarray:
+    """(docs, num_perm) int64 MinHash signatures of the shingle lists
+    ``offsets`` cuts the Arrow string array ``values`` into (every list
+    non-empty).
+
+    Base hashes are XXH64 seed 42 of the UTF-8 bytes — bit-identical to
+    Spark's ``xxhash64``.  Permutations are seeded multiply-add
+    bijections over Z_2^64 (odd multipliers, uint64 wraparound, which
+    ANSI-mode JVM arithmetic forbids); the minimum is taken in unsigned
+    order and returned reinterpreted as int64.  A min under a fixed
+    total order of a random bijection is a valid MinHash permutation
+    family.  One permutation at a time keeps memory at O(shingles)."""
+    rng = np.random.default_rng(_MINHASH_SEED)
+    a = (rng.integers(0, 2**62, size=num_perm, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
+    b = rng.integers(0, 2**63, size=num_perm, dtype=np.uint64)
+    _, str_offsets, data = values.buffers()
+    so = np.frombuffer(str_offsets, np.int32, len(values) + 1)
+    hs = xxh64(np.frombuffer(data, np.uint8), so[:-1], np.diff(so)).view(np.uint64)
+    starts = np.asarray(offsets[:-1], dtype=np.int64)
+    sig = np.empty((num_perm, len(starts)), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for j in range(num_perm):
+            sig[j] = np.minimum.reduceat(hs * a[j] + b[j], starts)
+    return np.ascontiguousarray(sig.T).view(np.int64)
+
+
+def _band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
+    """(docs, bands) int64 LSH band keys: XXH64 of each band's slice of
+    ``num_perm // bands`` signature values (their little-endian bytes).
+    Equal slices give equal keys; a key collision between unequal slices
+    only adds a candidate, which exact verification then rejects."""
+    n_docs, num_perm = sig.shape
+    rows = num_perm // bands
+    starts = (
+        np.arange(n_docs)[:, None] * num_perm + np.arange(bands)[None, :] * rows
+    ).ravel() * 8
+    return xxh64(
+        sig.view(np.uint8).ravel(), starts, np.full(starts.size, 8 * rows)
+    ).reshape(n_docs, bands)
+
+
 def _shingled(
     docs: DataFrame, id_col: str, text_col: str, n: int,
     udf_width: "int | None" = None,
+    lsh: "tuple[int, int] | None" = None,
 ) -> DataFrame:
-    """(doc_id, shingles) with empty-shingle docs dropped.
+    """(doc_id, shingles) with empty-shingle docs dropped, in ONE
+    ``mapInArrow`` pass; ``lsh=(num_perm, bands)`` adds the MinHash band
+    keys as ``bands`` (``array<long>``) from the same pass.
 
-    Shingling runs as an Arrow-batched pandas UDF, NOT the JVM
-    higher-order-function expression (:func:`shingles_expr`): HOFs are
-    interpreted (never codegen'd), and the measured cost of the expression
-    form was ~2.3 ms/doc — 10-30x the Python loop below.  Semantics are
-    identical to the JVM form (lower, split on ' ', drop empties, n-gram
-    join with ' ', distinct preserving first occurrence), which the
-    d_ngram_jaccard DuckDB oracle pins."""
-    import pandas as pd
-
-    def _sh(texts):
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            toks = [w for w in t.lower().split(" ") if w]
-            if len(toks) < n:
-                out.append([])
-                continue
-            out.append(
-                list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                    )
-                )
-            )
-        return pd.Series(out)
-
-    _sh.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    _sh = F.pandas_udf(_sh, "array<string>")
+    Shingling runs in Python, NOT as a JVM higher-order-function
+    expression: HOFs are interpreted (never codegen'd), and the measured
+    cost of the expression form was ~2.3 ms/doc — 10-30x the Python
+    loop.  Empty documents are dropped inside the pass, never by a
+    ``size(shingles) > 0`` filter: Spark pushes such a filter below a
+    UDF projection (and below the round-robin exchange), evaluating the
+    UDF twice per document.  Hashing, permutations and band keys are
+    vectorized numpy over the whole batch (:func:`_minhash`,
+    :func:`_band_keys`), so the LSH path has no second Python stage and
+    no interpreted ``transform(xxhash64)``."""
+    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
     slim = _parallelize_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")),
         width=udf_width,
     )
-    return slim.select(
-        "doc_id", _sh(F.col("_t")).alias("shingles")
-    ).filter(F.size("shingles") > 0)
+    fields = [slim.schema["doc_id"], StructField("shingles", ArrayType(StringType()))]
+    if lsh is not None:
+        fields.append(StructField("bands", ArrayType(LongType())))
+    names = [f.name for f in fields]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            keep, offsets, flat = _shingle_batch(batch.column(1).to_pylist(), n)
+            values = pa.array(flat, pa.string())
+            cols = [
+                batch.column(0).take(pa.array(keep, pa.int64())),
+                pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values),
+            ]
+            if lsh is not None:
+                num_perm, bands = lsh
+                keys = (
+                    _band_keys(_minhash(values, offsets, num_perm), bands)
+                    if keep else np.empty((0, bands), dtype=np.int64)
+                )
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(np.arange(0, keys.size + 1, bands, dtype=np.int32)),
+                    pa.array(keys.ravel()),
+                ))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return slim.mapInArrow(run, StructType(fields))
 
 
 def ngram_jaccard_pairs(
@@ -347,80 +414,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    seed: int = 12345,
-) -> DataFrame:
-    """MinHash signatures as ``array<long>``.
-
-    Two-stage split chosen by measurement:
-
-    * shingle -> 64-bit base hash stays JVM-side (ONE ``xxhash64`` pass per
-      shingle array);
-    * the ``num_perm`` permutations + minima run as a fully-vectorized
-      numpy pandas-UDF: multiply-add permutations over Z_2^64 (odd seeded
-      multipliers; uint64 wraparound, which ANSI-mode JVM arithmetic
-      forbids) on a padded (batch, max_len, 1) x (1, 1, k) broadcast, min
-      along the shingle axis under unsigned order.
-
-    The earlier all-JVM form (64 ``transform``/``array_min`` expressions)
-    was 20-30x slower: higher-order-function expressions are interpreted,
-    not codegen'd, so 64 per-permutation array materializations dominated
-    the whole dedup query (measured ~10 s for 5k docs; this form ~0.3 s).
-    Multiply-add by a seeded odd constant is a bijection on Z_2^64, and a
-    min under any fixed total order of a random bijection is a valid
-    MinHash permutation family.
-    """
-    return _signature_from_shingled(
-        _shingled(docs, id_col, text_col, n), num_perm, seed
-    )
-
-
-def _signature_from_shingled(
-    sh: DataFrame, num_perm: int, seed: int
-) -> DataFrame:
-    """(doc_id, signature) from an already-shingled frame — split out so
-    :func:`minhash_lsh_pairs` can reuse ONE shingle pass for both the
-    signature and the exact-Jaccard verification stages."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(seed)
-    a = (rng.integers(0, 2 ** 62, size=num_perm, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
-    b = rng.integers(0, 2 ** 63, size=num_perm, dtype=np.uint64)
-    pad = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-    def _minhash(hs_col):
-        lens = hs_col.map(len).to_numpy()
-        batch = len(lens)
-        width = max(1, int(lens.max()) if batch else 1)
-        mat = np.full((batch, width), pad, dtype=np.uint64)
-        for i, arr in enumerate(hs_col):
-            if len(arr):
-                mat[i, : len(arr)] = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-        with np.errstate(over="ignore"):
-            perms = mat[:, :, None] * a[None, None, :] + b[None, None, :]
-        # padded slots must never win the min; mask by LENGTH, not by the
-        # pad value, so a genuine hash equal to 2^64-1 is not masked out
-        pad_mask = np.arange(width)[None, :] >= lens[:, None]
-        perms[pad_mask] = pad
-        sig = perms.min(axis=1).view(np.int64)
-        return pd.Series(list(sig))
-
-    _minhash.__annotations__ = {"hs_col": pd.Series, "return": pd.Series}
-    _minhash = F.pandas_udf(_minhash, "array<long>")
-
-    hashed = sh.select(
-        "doc_id",
-        F.transform(F.col("shingles"), lambda s: F.xxhash64(s)).alias("hs"),
-    )
-    return hashed.select("doc_id", _minhash(F.col("hs")).alias("signature"))
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -435,7 +428,7 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Banded-LSH candidate pairs, verified with exact Jaccard.
 
-    ``udf_width``: explicit shingle-UDF parallelism for inputs whose
+    ``udf_width``: explicit shingle-pass parallelism for inputs whose
     size :func:`_parallelize_for_udf` cannot estimate (no file
     provenance — persisted intermediates, generated corpora); default
     keeps the size-aware rule.
@@ -450,7 +443,7 @@ def minhash_lsh_pairs(
     ``max_bucket_size``).  A boilerplate-identical cluster of m docs
     shares every band hash and yields O(m^2) candidate rows PER BAND
     with nothing bounding it; with the cap set, (band_id, band_hash)
-    groups larger than the cap are counted over a persisted band frame,
+    groups larger than the cap are counted over the persisted frame,
     dropped via broadcast anti-join, and logged.  Default off (exported
     oracles run uncapped); pairs all of whose shared bands are oversized
     are lost — for a true duplicate CLUSTER that loss is usually
@@ -458,54 +451,35 @@ def minhash_lsh_pairs(
     the cap composes with :func:`exact_duplicates` upstream.
 
     ``warn_band_size``: DEFAULT-ON warn-only observability (one cheap
-    aggregate over the persisted band frame; logs any (band_id,
-    band_hash) group over the soft threshold, drops nothing — the
-    exported oracles are byte-identical with it on).  ``None`` disables.
+    aggregate over the persisted frame; logs any (band_id, band_hash)
+    group over the soft threshold, drops nothing — the exported oracles
+    are byte-identical with it on).  ``None`` disables.
 
-    The shingled frame is computed ONCE and persisted (memory-with-disk
-    spill): three plan branches read it — the signature stage and both
-    sides of the verification join — and without the persist Spark
-    recomputes the tokenize/shingle UDF per branch (no common-subplan
-    elimination across self-joins; measured as the dominant cost of the
-    whole query in round 2).  Carrying the shingle arrays *through* the
-    banded candidate join instead would avoid the cache but shuffle
-    ~``bands``x the shingle bytes per doc — the wrong trade at 10^12 docs,
-    where candidates shuffle signatures (KBs), never shingle sets.  At
-    production scale the shingled/signature frame would be staged to a
-    table once and read by both stages; the cache is the single-session
-    equivalent.  The persist is TRACKED: one-shot jobs leave it to LRU
-    eviction (CacheManager also dedupes identical re-built plans), and a
-    long-lived session wraps calls in
-    :func:`markmuse_spark.plans.cache.cache_scope` to unpersist after
-    consuming the result.
+    Shingles, MinHash signatures and band keys come from ONE
+    ``mapInArrow`` pass (:func:`_shingled` with ``lsh``), whose
+    ``(doc_id, shingles, bands)`` frame is the only thing persisted
+    (memory-with-disk spill): the band explode feeding both self-join
+    sides (and the guard/warn aggregates) and both verification joins
+    read it, and without the persist Spark recomputes the Python pass
+    per branch (no common-subplan elimination across self-joins).
+    Carrying the shingle arrays *through* the banded candidate join
+    instead would shuffle ~``bands``x the shingle bytes per doc — the
+    wrong trade at 10^12 docs, where candidates shuffle band keys, never
+    shingle sets.  At production scale the frame would be staged to a
+    table once; the cache is the single-session equivalent.  The persist
+    is TRACKED: one-shot jobs leave it to LRU eviction, and a long-lived
+    session wraps calls in :func:`markmuse_spark.plans.cache.cache_scope`
+    to unpersist after consuming the result.  Building the plan triggers
+    no Spark job unless ``max_band_size`` is set.
     """
     from markmuse_spark.plans.cache import tracked_persist
 
-    rows = num_perm // bands
-    sh = tracked_persist(_shingled(docs, id_col, text_col, n, udf_width=udf_width))
-    sigs = _signature_from_shingled(sh, num_perm, seed=12345)
-    band_arr = F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",", *[F.col("signature")[b * rows + r].cast("string") for r in range(rows)]
-                ),
-                F.lit(b),
-            )
-            for b in range(bands)
-        ]
+    sh = tracked_persist(_shingled(
+        docs, id_col, text_col, n, udf_width=udf_width, lsh=(num_perm, bands)
+    ))
+    banded = sh.select(
+        "doc_id", F.posexplode("bands").alias("band_id", "band_hash")
     )
-    banded = sigs.select(
-        "doc_id", F.posexplode(band_arr).alias("band_id", "band_hash")
-    )
-    if warn_band_size is not None or max_band_size is not None:
-        # the drop guard's size aggregate (and its anti-join probe) is an
-        # extra reader of the band frame, so it gets its own persist —
-        # which ALSO means the signature UDF runs once total instead of
-        # once per self-join side below.  (The persist mark itself is
-        # lazy; since round 7 the warn path adds no job either, so
-        # building this plan triggers no Spark work at all.)
-        banded = tracked_persist(banded)
     if max_band_size is not None:
         banded = _drop_oversized_buckets(
             banded,

@@ -1212,7 +1212,8 @@ def p_corpus_curation(spark, sf_dir):
     from markmuse_spark.plans.cache import tracked_persist
     from markmuse_spark.sources import corpus
 
-    pages = corpus.pages_dataframe(spark, 200, seed=42, partitions=8)
+    partitions = 8
+    pages = corpus.pages_dataframe(spark, 200, seed=42, partitions=partitions)
     base = tracked_persist(
         extract_markdown(pages)
         .filter(F.col("error").isNull())
@@ -1249,9 +1250,9 @@ def p_corpus_curation(spark, sf_dir):
         num_perm=64, bands=32, threshold=0.5,
         # the survivor frame is a persisted intermediate (no file
         # provenance, so the size-aware width rule can't see it) of a
-        # 200-doc corpus generated at partitions=8 — match that width
-        # instead of fanning the shingle UDF out to 32 near-empty tasks
-        udf_width=8,
+        # 200-doc corpus — match the corpus's width instead of fanning
+        # the shingle pass out to 32 near-empty tasks
+        udf_width=partitions,
     )
     dominated = pairs.select(F.col("doc_b").alias("url")).distinct()
     return (
@@ -1279,14 +1280,15 @@ def d_decontaminate(spark, sf_dir):
     through a hash join — at 10^12 docs nothing shuffles but matches."""
     from markmuse_spark.operators.dedup import _shingled
 
-    sh = _shingled(_t(spark, sf_dir, "documents"), "doc_id", "text", 3)
-    corpus_side = sh.filter(F.col("doc_id") >= 5).select(
-        "doc_id", F.explode("shingles").alias("g")
-    )
-    probe = (
-        sh.filter(F.col("doc_id") < 5)
-        .select(F.col("doc_id").alias("bench_id"), F.explode("shingles").alias("g"))
-    )
+    docs = _t(spark, sf_dir, "documents")
+    # split BEFORE shingling: no filter reaches below the opaque Arrow
+    # pass, so each side shingles only its own documents
+    corpus_side = _shingled(
+        docs.filter(F.col("doc_id") >= 5), "doc_id", "text", 3
+    ).select("doc_id", F.explode("shingles").alias("g"))
+    probe = _shingled(
+        docs.filter(F.col("doc_id") < 5), "doc_id", "text", 3
+    ).select(F.col("doc_id").alias("bench_id"), F.explode("shingles").alias("g"))
     return (
         corpus_side.join(F.broadcast(probe), "g")
         .groupBy("doc_id")

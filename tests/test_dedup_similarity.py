@@ -48,6 +48,98 @@ def test_minhash_lsh_matches_exact_at_high_threshold(docs, exact_pairs):
     assert set(lsh) <= set(exact_pairs)
 
 
+def test_xxh64_matches_spark_xxhash64(spark):
+    """The numpy XXH64 behind the MinHash base hashes is bit-identical to
+    Spark's ``xxhash64`` (seed 42, UTF-8 bytes) on every branch of the
+    algorithm: the byte tail, the 4-byte word, 8-byte words and the
+    32-byte stripe loop, over 1- to 4-byte UTF-8 characters."""
+    import random
+
+    import numpy as np
+    import pyarrow as pa
+
+    from markmuse_spark.operators.xxh64 import xxh64
+
+    rng = random.Random(11)
+    byte_lengths = [0, 1, 3, 4, 7, 8, 31, 32, 33, 63, 64, 100, 257, 1000]
+    strs = [
+        "".join(rng.choice("abcxyz 0189.,") for _ in range(k))
+        for k in byte_lengths for _ in range(4)
+    ]
+    strs += [
+        "".join(rng.choice("aé中😀ß €\u00a0🎉") for _ in range(rng.randrange(140)))
+        for _ in range(400)
+    ]
+    arr = pa.array(strs, pa.string())
+    offs = np.frombuffer(arr.buffers()[1], np.int32, len(strs) + 1)
+    assert set(byte_lengths) <= set(np.diff(offs).tolist())
+    got = xxh64(np.frombuffer(arr.buffers()[2], np.uint8), offs[:-1], np.diff(offs))
+    df = spark.createDataFrame(list(enumerate(strs)), "i int, s string")
+    want = [r[0] for r in df.orderBy("i").select(F.xxhash64("s")).collect()]
+    assert got.tolist() == want
+
+
+def test_fused_pass_signatures_match_two_stage_reference(docs):
+    """The fused pass's per-doc MinHash signatures equal the previous
+    two-stage form, rebuilt here as the reference: Spark's interpreted
+    ``transform(shingles, xxhash64)`` base hashes, then seeded numpy
+    multiply-add permutations with an unsigned min.  The band keys the
+    Spark pass emits are those signatures' band slices, hashed."""
+    import numpy as np
+    import pyarrow as pa
+
+    base = {
+        r["doc_id"]: r["hs"]
+        for r in dedup._shingled(docs, "doc_id", "text", 3)
+        .select("doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs"))
+        .collect()
+    }
+    rng = np.random.default_rng(12345)
+    a = (rng.integers(0, 2**62, size=64, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
+    b = rng.integers(0, 2**63, size=64, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        want = {
+            d: (np.asarray(hs, np.int64).astype(np.uint64)[:, None] * a + b)
+            .min(axis=0).view(np.int64).tolist()
+            for d, hs in base.items()
+        }
+
+    rows = docs.select("doc_id", "text").collect()
+    keep, offsets, flat = dedup._shingle_batch([r["text"] for r in rows], 3)
+    sig = dedup._minhash(pa.array(flat, pa.string()), offsets, 64)
+    ids = [rows[i]["doc_id"] for i in keep]
+    assert dict(zip(ids, sig.tolist())) == want
+
+    keys = dedup._band_keys(sig, 16)
+    emitted = {
+        r["doc_id"]: r["bands"]
+        for r in dedup._shingled(docs, "doc_id", "text", 3, lsh=(64, 16)).collect()
+    }
+    assert emitted == dict(zip(ids, keys.tolist()))
+
+
+def test_shingle_and_lsh_passes_run_python_once(docs):
+    """A ``_shingled`` frame has exactly one Python-eval node (a pandas-UDF
+    projection with a ``size > 0`` filter had the filter pushed below it
+    and evaluated the UDF twice).  The LSH plan's only Python node is the
+    fused mapInArrow, printed once per scan of its one persisted frame:
+    no interpreted ``transform(xxhash64)``, no second ArrowEvalPython."""
+    import re as _re
+
+    def python_nodes(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = _re.findall(
+            r"(?:ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas)\b.*", plan
+        )
+        return plan, nodes
+
+    _, nodes = python_nodes(dedup._shingled(docs, "doc_id", "text", 3))
+    assert len(nodes) == 1 and nodes[0].startswith("MapInArrow")
+    plan, nodes = python_nodes(dedup.minhash_lsh_pairs(docs, threshold=0.5))
+    assert "xxhash64" not in plan
+    assert len(set(nodes)) == 1 and nodes[0].startswith("MapInArrow")
+
+
 def test_simhash_banded_search_is_exact(docs, exact_pairs):
     # the banded candidate join must find EXACTLY the pairs within the
     # Hamming radius (8 bands of 8 bits guarantee recall for <=7; radius 6)
@@ -194,16 +286,15 @@ def test_line_dedup_null_text_is_empty_document(spark):
 
 def test_cache_scope_releases_tracked_persists(docs):
     """Long-lived-session lifecycle: every frame an operator persists
-    inside a cache_scope (minhash's shingled AND band frames — the band
-    frame is persisted since round 6 for the default-on bucket
-    observability — plus simhash's signature frame) must be registered
-    while cached and unpersisted at exit."""
+    inside a cache_scope (minhash's one fused shingle/band frame plus
+    simhash's signature frame) must be registered while cached and
+    unpersisted at exit."""
     from markmuse_spark.plans.cache import cache_scope
 
     with cache_scope() as reg:
         dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()
         dedup.simhash_near_pairs(docs).collect()
-        assert len(reg) == 3
+        assert len(reg) == 2
         assert all(df.storageLevel.useMemory for df in reg)
     assert all(not df.storageLevel.useMemory for df in reg)
     assert all(not df.storageLevel.useDisk for df in reg)
