@@ -239,19 +239,20 @@ def _probe_file_sizes(files: list[str], spark) -> "list[int] | None":
 _MINHASH_SEED = 12345
 
 
-def _shingle_batch(texts, n: int):
-    """Shingle one batch of documents: lower, split on ' ', drop empty
-    tokens, ``' '``-joined word n-grams, distinct in first-occurrence
-    order — the semantics the d_ngram_jaccard DuckDB oracle pins.
-    Documents with no shingle (NULL, or fewer than ``n`` tokens) are
-    dropped here, not by a later filter.
+def _shingle_batch(batch, n: int):
+    """Shingle one ``(doc_id, text)`` Arrow batch: lower, split on ' ',
+    drop empty tokens, ``' '``-joined word n-grams, distinct in
+    first-occurrence order — the semantics the d_ngram_jaccard DuckDB
+    oracle pins.  Documents with no shingle (NULL, or fewer than ``n``
+    tokens) are dropped here, not by a later filter.
 
-    Returns ``(kept row indices, list offsets, flat shingles)``: the
-    parts of an Arrow list column over the kept rows."""
+    Returns the kept ``(doc_id, shingles)`` as Arrow arrays."""
+    import pyarrow as pa
+
     keep: list = []
     offsets = [0]
     flat: list = []
-    for i, t in enumerate(texts):
+    for i, t in enumerate(batch.column(1).to_pylist()):
         if t is None:
             continue
         toks = [w for w in t.lower().split(" ") if w]
@@ -262,7 +263,10 @@ def _shingle_batch(texts, n: int):
         )
         keep.append(i)
         offsets.append(len(flat))
-    return keep, offsets, flat
+    return (
+        batch.column(0).take(pa.array(keep, pa.int64())),
+        pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(flat, pa.string())),
+    )
 
 
 def _minhash(values, offsets, num_perm: int) -> np.ndarray:
@@ -306,14 +310,21 @@ def _band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
     ).reshape(n_docs, bands)
 
 
+def _slim(docs: DataFrame, id_col: str, text_col: str, udf_width) -> DataFrame:
+    """``(doc_id, _t)`` projection a shingle pass reads, spread over
+    enough partitions (:func:`_parallelize_for_udf`)."""
+    return _parallelize_for_udf(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")),
+        width=udf_width,
+    )
+
+
 def _shingled(
     docs: DataFrame, id_col: str, text_col: str, n: int,
     udf_width: "int | None" = None,
-    lsh: "tuple[int, int] | None" = None,
 ) -> DataFrame:
     """(doc_id, shingles) with empty-shingle docs dropped, in ONE
-    ``mapInArrow`` pass; ``lsh=(num_perm, bands)`` adds the MinHash band
-    keys as ``bands`` (``array<long>``) from the same pass.
+    ``mapInArrow`` pass.
 
     Shingling runs in Python, NOT as a JVM higher-order-function
     expression: HOFs are interpreted (never codegen'd), and the measured
@@ -321,44 +332,22 @@ def _shingled(
     loop.  Empty documents are dropped inside the pass, never by a
     ``size(shingles) > 0`` filter: Spark pushes such a filter below a
     UDF projection (and below the round-robin exchange), evaluating the
-    UDF twice per document.  Hashing, permutations and band keys are
-    vectorized numpy over the whole batch (:func:`_minhash`,
-    :func:`_band_keys`), so the LSH path has no second Python stage and
-    no interpreted ``transform(xxhash64)``."""
-    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+    UDF twice per document."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    slim = _parallelize_for_udf(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")),
-        width=udf_width,
-    )
-    fields = [slim.schema["doc_id"], StructField("shingles", ArrayType(StringType()))]
-    if lsh is not None:
-        fields.append(StructField("bands", ArrayType(LongType())))
-    names = [f.name for f in fields]
+    slim = _slim(docs, id_col, text_col, udf_width)
 
     def run(batches):
         import pyarrow as pa
 
         for batch in batches:
-            keep, offsets, flat = _shingle_batch(batch.column(1).to_pylist(), n)
-            values = pa.array(flat, pa.string())
-            cols = [
-                batch.column(0).take(pa.array(keep, pa.int64())),
-                pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values),
-            ]
-            if lsh is not None:
-                num_perm, bands = lsh
-                keys = (
-                    _band_keys(_minhash(values, offsets, num_perm), bands)
-                    if keep else np.empty((0, bands), dtype=np.int64)
-                )
-                cols.append(pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, keys.size + 1, bands, dtype=np.int32)),
-                    pa.array(keys.ravel()),
-                ))
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            yield pa.RecordBatch.from_arrays(
+                list(_shingle_batch(batch, n)), names=["doc_id", "shingles"]
+            )
 
-    return slim.mapInArrow(run, StructType(fields))
+    return slim.mapInArrow(run, StructType(
+        [slim.schema["doc_id"], StructField("shingles", ArrayType(StringType()))]
+    ))
 
 
 def ngram_jaccard_pairs(
@@ -456,7 +445,9 @@ def minhash_lsh_pairs(
     are byte-identical with it on).  ``None`` disables.
 
     Shingles, MinHash signatures and band keys come from ONE
-    ``mapInArrow`` pass (:func:`_shingled` with ``lsh``), whose
+    ``mapInArrow`` pass (:func:`_shingle_batch`, :func:`_minhash`,
+    :func:`_band_keys` — vectorized numpy over the whole batch, so no
+    second Python stage and no interpreted ``transform(xxhash64)``), whose
     ``(doc_id, shingles, bands)`` frame is the only thing persisted
     (memory-with-disk spill): the band explode feeding both self-join
     sides (and the guard/warn aggregates) and both verification joins
@@ -472,11 +463,37 @@ def minhash_lsh_pairs(
     to unpersist after consuming the result.  Building the plan triggers
     no Spark job unless ``max_band_size`` is set.
     """
+    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+
     from markmuse_spark.plans.cache import tracked_persist
 
-    sh = tracked_persist(_shingled(
-        docs, id_col, text_col, n, udf_width=udf_width, lsh=(num_perm, bands)
-    ))
+    slim = _slim(docs, id_col, text_col, udf_width)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids, shingles = _shingle_batch(batch, n)
+            keys = (
+                _band_keys(
+                    _minhash(shingles.values, shingles.offsets.to_numpy(), num_perm),
+                    bands,
+                )
+                if len(ids) else np.empty((0, bands), dtype=np.int64)
+            )
+            yield pa.RecordBatch.from_arrays(
+                [ids, shingles, pa.ListArray.from_arrays(
+                    pa.array(np.arange(0, keys.size + 1, bands, dtype=np.int32)),
+                    pa.array(keys.ravel()),
+                )],
+                names=["doc_id", "shingles", "bands"],
+            )
+
+    sh = tracked_persist(slim.mapInArrow(run, StructType([
+        slim.schema["doc_id"],
+        StructField("shingles", ArrayType(StringType())),
+        StructField("bands", ArrayType(LongType())),
+    ])))
     banded = sh.select(
         "doc_id", F.posexplode("bands").alias("band_id", "band_hash")
     )

@@ -3,7 +3,7 @@ Python loop).
 
 Bit-identical to Spark's ``xxhash64`` of a string column: Spark hashes
 the UTF-8 bytes with the standard XXH64 algorithm (``XXH64.java``,
-little-endian word reads, default seed 42), which is what
+little-endian word reads, seed 42), which is what
 :func:`xxh64` computes for every ``data[starts[i] : starts[i] +
 lengths[i]]``.  The strings are processed in lock-step: every round of
 the algorithm is one numpy operation over the strings that still have
@@ -20,7 +20,8 @@ _P2 = np.uint64(0xC2B2AE3D27D4EB4F)
 _P3 = np.uint64(0x165667B19E3779F9)
 _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
-_MASK = (1 << 64) - 1
+#: Spark's ``xxhash64`` default seed
+_SEED = np.uint64(42)
 
 
 def _rotl(x, r: int):
@@ -31,7 +32,7 @@ def _round(acc, lane):
     return _rotl(acc + lane * _P2, 31) * _P1
 
 
-def xxh64(data, starts, lengths, seed: int = 42) -> np.ndarray:
+def xxh64(data, starts, lengths) -> np.ndarray:
     """XXH64 of each byte string ``data[starts[i] : starts[i] + lengths[i]]``.
 
     ``data`` is a uint8 array (an Arrow string array's data buffer, say);
@@ -43,14 +44,13 @@ def xxh64(data, starts, lengths, seed: int = 42) -> np.ndarray:
     pos = np.asarray(starts, dtype=np.int64).copy()
     n_bytes = np.asarray(lengths, dtype=np.int64)
     end = pos + n_bytes
-    h = np.full(len(pos), (seed + int(_P5)) & _MASK, dtype=np.uint64)
     with np.errstate(over="ignore"):
+        h = np.full(len(pos), _SEED + _P5, dtype=np.uint64)
         big = np.flatnonzero(n_bytes >= 32)
         if big.size:
-            s = np.uint64(seed & _MASK)
             v = [
                 np.full(big.size, x, dtype=np.uint64)
-                for x in (s + _P1 + _P2, s + _P2, s, s - _P1)
+                for x in (_SEED + _P1 + _P2, _SEED + _P2, _SEED, _SEED - _P1)
             ]
             p = pos[big]
             limit = end[big] - 32

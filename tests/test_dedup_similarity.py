@@ -83,8 +83,8 @@ def test_fused_pass_signatures_match_two_stage_reference(docs):
     """The fused pass's per-doc MinHash signatures equal the previous
     two-stage form, rebuilt here as the reference: Spark's interpreted
     ``transform(shingles, xxhash64)`` base hashes, then seeded numpy
-    multiply-add permutations with an unsigned min.  The band keys the
-    Spark pass emits are those signatures' band slices, hashed."""
+    multiply-add permutations with an unsigned min.  Band keys collide
+    exactly when the band's signature slices are equal."""
     import numpy as np
     import pyarrow as pa
 
@@ -104,18 +104,19 @@ def test_fused_pass_signatures_match_two_stage_reference(docs):
             for d, hs in base.items()
         }
 
-    rows = docs.select("doc_id", "text").collect()
-    keep, offsets, flat = dedup._shingle_batch([r["text"] for r in rows], 3)
-    sig = dedup._minhash(pa.array(flat, pa.string()), offsets, 64)
-    ids = [rows[i]["doc_id"] for i in keep]
-    assert dict(zip(ids, sig.tolist())) == want
+    batch = pa.RecordBatch.from_pylist(
+        [r.asDict() for r in docs.select("doc_id", "text").collect()]
+    )
+    ids, shingles = dedup._shingle_batch(batch, 3)
+    sig = dedup._minhash(shingles.values, shingles.offsets.to_numpy(), 64)
+    assert dict(zip(ids.to_pylist(), sig.tolist())) == want
 
+    # band keys: equal exactly when the band's signature slice is equal
     keys = dedup._band_keys(sig, 16)
-    emitted = {
-        r["doc_id"]: r["bands"]
-        for r in dedup._shingled(docs, "doc_id", "text", 3, lsh=(64, 16)).collect()
-    }
-    assert emitted == dict(zip(ids, keys.tolist()))
+    slices = sig.reshape(len(sig), 16, 4)
+    same_slice = (slices[:, None] == slices[None]).all(axis=-1)
+    assert same_slice.sum() > len(sig) * 16  # some cross-doc band collisions
+    assert ((keys[:, None] == keys[None]) == same_slice).all()
 
 
 def test_shingle_and_lsh_passes_run_python_once(docs):
