@@ -7,4 +7,11 @@ for the one operator Spark lacks (layout extraction), explicit skew/resume
 /lineage handling for 10^12-document scale.  See README.md and COVERAGE.md.
 """
 
+from markmuse_spark import _zipimport
+
 __version__ = "0.1.0"
+
+# Every Python worker imports this package when it unpickles one of our
+# UDFs, so from its next task on, the per-task importlib.invalidate_caches()
+# skips re-reading zips (pyspark.zip, py4j, --py-files) that have not changed.
+_zipimport.install()

@@ -142,23 +142,26 @@ def canonical_url(url: Column, tracked_params: str = TRACKING_PARAMS) -> Column:
        dangling ``?``/``&``
     6. strip a bare trailing slash (``https://h/a/`` == ``https://h/a``;
        the root form ``https://h/`` also folds to ``https://h``)
+
+    Keep each intermediate referenced once where possible: a column used
+    twice is inlined twice into the expression tree, and every inferred
+    ``isnotnull(canon_url)`` join filter evaluates the whole tree again.
+    Splits are regex passes for that reason, not ``substr``/``instr``
+    over a shared prefix; the tree has 19 regex calls.
     """
-    u = _c(url)
-    u = F.regexp_replace(u, r"#.*$", "")  # 1
-    head = F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
-    rest = u.substr(F.length(head) + 1, F.length(u))
-    head = F.lower(head)  # 2
+    u = F.regexp_replace(_c(url), r"#.*$", "")  # 1
+    head_re = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*"
+    head = F.lower(F.regexp_extract(u, "(" + head_re + ")", 1))  # 2
     head = F.regexp_replace(head, r"^([a-z][a-z0-9+.-]*://)www\.", "$1")  # 3
     head = F.regexp_replace(head, r"^(http://[^/:]*):80$", "$1")  # 4
     head = F.regexp_replace(head, r"^(https://[^/:]*):443$", "$1")
-    u = F.concat(head, rest)
-    # 5: isolate the query substring (after the FIRST '?') so the
+    u = F.concat(head, F.regexp_replace(u, head_re, ""))
+    # 5: isolate the query substring (from the FIRST '?') so the
     # tracked-param pass cannot touch the path — a raw '&' in a path
     # segment with no '?' before it would otherwise match the
     # lookbehind and amputate the url at the fake "param"
-    qpos = F.instr(u, "?")
-    path_part = F.when(qpos > 0, u.substr(F.lit(1), qpos - 1)).otherwise(u)
-    qstr = F.when(qpos > 0, u.substr(qpos, F.length(u))).otherwise(F.lit(""))
+    path_part = F.regexp_replace(u, r"(?s)\?.*$", "")
+    qstr = F.regexp_extract(u, r"(?s)(\?.*)$", 1)
     qstr = F.regexp_replace(  # lookbehind keeps adjacent params matchable
         qstr, r"(?<=[?&])(" + tracked_params + r")=[^&]*(&|$)", ""
     )

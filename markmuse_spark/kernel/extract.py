@@ -17,7 +17,7 @@ kill a 10^12-row job.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Optional
+from typing import Any, Optional
 
 from markmuse_spark.kernel import html_extract, pdf_extract
 from markmuse_spark.kernel.markdown_assembly import assemble_one
@@ -86,13 +86,6 @@ def extract_document(url: str, payload: Optional[bytes]) -> dict[str, Any]:
             "n_chars": 0,
             "error": f"{type(exc).__name__}: {exc}",
         }
-
-
-def extract_batch(
-    urls: Iterable[str], payloads: Iterable[Optional[bytes]]
-) -> list[dict[str, Any]]:
-    """One Arrow batch of documents in, one list of result rows out."""
-    return [extract_document(u, p) for u, p in zip(urls, payloads)]
 
 
 def extract_document_enhanced(

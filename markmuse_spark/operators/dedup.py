@@ -505,11 +505,13 @@ def minhash_lsh_pairs(
             "minhash_lsh_pairs",
             param_name="max_band_size",
         )
-    # warn-only observability rides ONE side of the self-join (window
-    # over the band keys + CollectMetrics — zero extra jobs/exchanges;
-    # the warn fires on the caller's own first action): at 100 TB a
-    # boilerplate-identical cluster must be announced, not discovered
-    # from a melted shuffle stage.  No rows dropped, oracles unchanged.
+    # warn-only observability rides ONE side of the self-join (a
+    # group count over the band keys, its exchange and a broadcast
+    # join-back + CollectMetrics; no extra action, the warn fires on the
+    # caller's own first action): at 100 TB a boilerplate-identical
+    # cluster must be announced, not discovered from a melted shuffle
+    # stage.  No rows dropped, oracles unchanged.  Not free: ~20% of the
+    # MinHash stage (ROADMAP open item "The default-on LSH band warn").
     a_side = banded
     if warn_band_size is not None:
         a_side = _observe_oversized_buckets(

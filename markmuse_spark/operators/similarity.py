@@ -513,17 +513,18 @@ _SLOTS_WARNED = False
 def _observe_oversized_buckets(
     frame: DataFrame, keys: list[str], soft_cap: int, op_name: str
 ) -> DataFrame:
-    """Default-on, warn-ONLY degenerate-bucket observability at ZERO extra
-    Spark jobs (round-7 ask #7; round 6 ran an eager ``.first()`` at
+    """Default-on, warn-ONLY degenerate-bucket observability with no extra
+    Spark action (round-7 ask #7; round 6 ran an eager ``.first()`` at
     plan-construction time — one blocking job per miner call).
 
-    Returns ``frame`` with a per-group member count attached as a window
-    over exactly the keys the miners' self-join already exchanges on —
-    the window reuses the join side's Exchange+Sort, so the plan gains a
-    ``Window`` + ``CollectMetrics`` node and NOTHING else — and a
+    Returns ``frame`` left-joined to a broadcast of its oversized groups
+    (a group count over ``keys``, with its own exchange, filtered to
+    groups above ``soft_cap``) plus a ``CollectMetrics`` node, and a
     :class:`~pyspark.sql.Observation` whose metrics materialize during
-    the CALLER's first action.  A daemon waiter thread parks on
-    ``Observation.get`` and logs when any group exceeds ``soft_cap``.
+    the CALLER's first action.  The count, exchange and join-back run
+    inside that action and cost ~20% of the MinHash stage (ROADMAP open
+    item "The default-on LSH band warn").  A daemon waiter thread parks
+    on ``Observation.get`` and logs when any group exceeds ``soft_cap``.
     Never drops rows, so the exported oracles are byte-identical with it
     on — the point is that a 100 TB run with a zero-vector cluster or a
     boilerplate-identical document cluster TELLS the operator it is
@@ -734,10 +735,11 @@ def lsh_pair_candidates(
     bounds the worst bucket's join output.
 
     ``warn_bucket_size``: DEFAULT-ON warn-only observability
-    (:data:`DEFAULT_WARN_BUCKET_SIZE`): a window count over the join
-    keys + ``CollectMetrics`` on one self-join side — zero extra jobs;
-    the warn logs on the caller's first action over the result.  No rows
-    dropped, oracles unchanged; ``None`` disables."""
+    (:data:`DEFAULT_WARN_BUCKET_SIZE`): a group count over the join
+    keys, its exchange and a broadcast join-back + ``CollectMetrics`` on
+    one self-join side (see :func:`_observe_oversized_buckets` for its
+    cost); the warn logs on the caller's first action over the result.
+    No rows dropped, oracles unchanged; ``None`` disables."""
     if dim is None:
         dim = _vec_dim(vectors, vec_col)  # pin one width for every batch
     sigs = lsh_signatures(vectors, n_tables, n_planes, seed, id_col, vec_col, dim)
@@ -755,9 +757,9 @@ def lsh_pair_candidates(
         b = _drop_oversized_buckets(
             b, ["table_id", "bucket"], max_bucket_size, "lsh_pair_candidates"
         )
-    # warn-only observability rides ONE side of the self-join (window over
-    # the join keys + CollectMetrics — zero extra jobs, zero extra
-    # exchanges; the warn fires on the caller's own first action)
+    # warn-only observability rides ONE side of the self-join (group
+    # count over the join keys + broadcast join-back + CollectMetrics; no
+    # extra action, the warn fires on the caller's own first action)
     a_side = b
     if warn_bucket_size is not None:
         a_side = _observe_oversized_buckets(

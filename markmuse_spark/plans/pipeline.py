@@ -6,11 +6,15 @@ Spark-first re-expression of the reference's control plane:
 * **resume anti-join** (A21, ``task_api/routes.py:144-154`` analog):
   previously committed urls are excluded before any payload is read
 * **url-hash repartition**: ``TASKS_PER_CORE * parallelism`` partitions
-  keyed on url.  Every Python-worker task carries a fixed start-up cost
-  (pyspark re-reads its zip imports on each task), so the task count is
-  kept at the low end of Spark's 2-3 tasks-per-core guidance: enough
-  slack for the scheduler when per-doc cost is skewed, few enough that
-  task start-up does not rival the kernel on small inputs
+  keyed on url, at the low end of Spark's 2-3 tasks-per-core guidance:
+  enough slack for the scheduler when per-doc cost is skewed, few
+  enough that per-task start-up (worker handshake, Arrow stream set-up)
+  does not rival the kernel on small inputs.  The largest part of that
+  start-up, pyspark's per-task re-read of every zip on the worker's
+  path, is gone: importing this package installs the zip-stamp check of
+  :mod:`markmuse_spark._zipimport`.  One task per core runs crawl-sized
+  jobs slightly faster, but its half-as-many extracted files raised the
+  curation benchmark's output-to-input byte ratio by 5-19%, so two stays
 * **atomic publish**: each run writes ``extracted/run_id=<id>/`` through
   Spark's committer; a run directory counts as committed only when its
   ``_SUCCESS`` marker exists (Hadoop commit-protocol semantics — the

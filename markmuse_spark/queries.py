@@ -662,34 +662,14 @@ def _hits(lang):
     return F.size(F.filter(_tokens(), lambda x: x.isin(*_STOP[lang])))
 
 
-def _bigrams_expr():
-    """Word-bigram array over ``text`` — the one definition shared by
-    t_repetition and the composed curation pipeline (a drift between them
-    would silently change what the pipeline filters).
-
-    Round-8 measurement note: this is kept for reference/tests, but the
-    query paths now use :func:`_ngrams_udf` — the transform lambda's
-    ``element_at(t, i)`` references re-evaluate the CAPTURED tokens
-    expression per element in Spark's interpreted HOF evaluator (no
-    memoization), making this form O(tokens^2) per document: 19.0 s for
-    t_repetition at sf0.1 vs 7.4 s with the tokens array pre-projected
-    and ~1 s with the Arrow-batched UDF (the same measured decision
-    behind ``operators.dedup._shingled``)."""
-    t = _tokens()
-    return F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _ngrams_udf(n: int):
-    """Arrow-batched word n-gram array UDF, semantics identical to
-    :func:`_bigrams_expr`'s JVM form (lower, split on ' ', drop empties,
-    ``' '``-joined n-grams, ``[]`` under ``n`` tokens, NULL text ->
-    ``[]``) — the parity the t_repetition DuckDB oracle pins every run.
+    """Arrow-batched word n-gram array UDF: lower, split on ' ', drop
+    empties, ``' '``-joined n-grams, ``[]`` under ``n`` tokens, NULL text
+    -> ``[]`` — the parity the t_repetition DuckDB oracle pins every run.
+    It replaced a JVM ``transform``/``element_at`` form whose lambda
+    re-evaluated the captured tokens expression per element in Spark's
+    interpreted HOF evaluator, O(tokens^2) per document (round 8: 19.0 s
+    for t_repetition at sf0.1, ~1 s with this UDF).
     Python-side token semantics match ``operators.dedup._shingled``,
     whose oracle parity is long established on these tables."""
     import pandas as pd
@@ -1095,7 +1075,7 @@ def p_curation_keeplist(spark, sf_dir):
     expressed over the shared base so the fingerprint computes once).
 
     Every stage reuses the SHARED expression helper its standalone
-    operator uses (``_lang_expr``/``_quality_exprs``/``_bigrams_expr``/
+    operator uses (``_lang_expr``/``_quality_exprs``/``_ngrams_udf``/
     ``normalized_fingerprint``) — the composed pipeline cannot drift from
     the operators it composes.  Scale shape: ONE scan computes the
     per-doc columns into ``base``, which is persisted because THREE plan

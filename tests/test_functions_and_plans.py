@@ -288,6 +288,81 @@ def test_canonical_url_matches_independent_replica(spark):
     assert got == [_canonicalize_url(u) for u in urls]
 
 
+def _canonical_url_substr_form(url, tracked_params):
+    """``canonical_url`` as first written, splitting with ``substr``,
+    ``instr`` and ``when`` over shared intermediates: the reference the
+    single-reference form must match byte for byte."""
+    from pyspark.sql import functions as F
+
+    u = F.regexp_replace(url, r"#.*$", "")
+    head = F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
+    rest = u.substr(F.length(head) + 1, F.length(u))
+    head = F.lower(head)
+    head = F.regexp_replace(head, r"^([a-z][a-z0-9+.-]*://)www\.", "$1")
+    head = F.regexp_replace(head, r"^(http://[^/:]*):80$", "$1")
+    head = F.regexp_replace(head, r"^(https://[^/:]*):443$", "$1")
+    u = F.concat(head, rest)
+    qpos = F.instr(u, "?")
+    path_part = F.when(qpos > 0, u.substr(F.lit(1), qpos - 1)).otherwise(u)
+    qstr = F.when(qpos > 0, u.substr(qpos, F.length(u))).otherwise(F.lit(""))
+    qstr = F.regexp_replace(
+        qstr, r"(?<=[?&])(" + tracked_params + r")=[^&]*(&|$)", ""
+    )
+    u = F.concat(path_part, qstr)
+    u = F.regexp_replace(u, r"[?&]+$", "")
+    return F.regexp_replace(u, r"(?<!/)/$", "")
+
+
+def _edge_case_urls():
+    import itertools
+
+    schemes = ["", "http://", "HTTPS://", "ftp://", "h2+x.y-z://", "1http://", "://"]
+    hosts = ["", "WWW.Ex.COM", "www.", "ex.com:80", "Ex.com:443", "ex.com:8080",
+             "é.example", "a\nb"]
+    paths = ["", "/", "/a/", "/a&ref=1/b", "//", "/A b/"]
+    queries = ["", "?", "?utm_source=x", "?a=1&utm_medium=y&gclid=z", "?&&",
+               "?a=1?b=2", "?x=1\n", "?ref_src=t/"]
+    frags = ["", "#", "#f?x=1", "#a\nb"]
+    urls = ["".join(p) for p in itertools.product(schemes, hosts, paths, queries, frags)]
+    return urls + [None, "?", "#", "\n", "?a\n#b?c"]
+
+
+def test_canonical_url_regex_node_bound(spark):
+    """Each intermediate is inlined once: the tree stays at <= 20 regex
+    calls (the substr/instr/when form expanded to 75)."""
+    from pyspark.sql import functions as F
+
+    from markmuse_spark import functions as fn
+
+    expr = str(fn.canonical_url(F.col("url")))
+    calls = expr.count("regexp_replace(") + expr.count("regexp_extract(")
+    assert calls <= 20, calls
+    old = str(_canonical_url_substr_form(F.col("url"), fn.TRACKING_PARAMS))
+    assert old.count("regexp_replace(") + old.count("regexp_extract(") > 50
+
+
+@pytest.mark.parametrize("tracked", [None, r"ref|gclid"])
+def test_canonical_url_matches_substr_form(spark, tracked):
+    from pyspark.sql import functions as F
+
+    from markmuse_spark import functions as fn
+
+    tracked = tracked or fn.TRACKING_PARAMS
+    urls = _edge_case_urls()
+    df = spark.createDataFrame([(u,) for u in urls], "u string")
+    rows = df.select(
+        "u",
+        fn.canonical_url(F.col("u"), tracked).alias("new"),
+        _canonical_url_substr_form(F.col("u"), tracked).alias("old"),
+    ).collect()
+    assert len(rows) == len(urls) > 10_000
+    diffs = [(r["u"], r["new"], r["old"]) for r in rows if r["new"] != r["old"]]
+    assert diffs == []
+    # the corpus reaches every rule, so equality is not vacuous
+    changed = sum(r["u"] != r["new"] for r in rows)
+    assert 0 < changed < len(rows)
+
+
 def test_mask_pii_rules_and_negatives(spark):
     """Each PII rule masks its shape; the documented negatives (years,
     version/price decimals, bare digit runs, short dotted pairs) never
