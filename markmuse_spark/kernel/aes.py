@@ -1,16 +1,27 @@
 """AES-128/256 from scratch (FIPS-197) for encrypted-PDF support.
 
-Why hand-rolled: the sandbox has no ``cryptography``/``pycryptodome``,
-and the reference reads any PDF via its OCR service
-(``/root/reference/markmuse.py:266-299``) so it never needs a cipher —
-but a wild corpus contains AES-encrypted PDFs (AESV2 since Acrobat 7,
-AESV3/AES-256 the modern default), and an extraction engine that fails
-them all leaves real data on the floor.  Everything here derives from
-the public FIPS-197 spec; the S-box and GF(2^8) multiplication tables
-are COMPUTED at import from the field definition (multiplicative
-inverse + affine transform) rather than transcribed, and the round
-functions use the classic 32-bit T-table decomposition (one fused
-SubBytes+ShiftRows+MixColumns lookup per state byte).
+Why a cipher at all: the reference reads any PDF via its OCR service
+(reference ``markmuse.py:266-299``) so it never needs one — but a wild
+corpus contains AES-encrypted PDFs (AESV2 since Acrobat 7, AESV3/AES-256
+the modern default), and an extraction engine that fails them all
+leaves real data on the floor.
+
+Why hand-rolled, although the entry points below dispatch to OpenSSL
+through ``cryptography`` whenever it imports (``_HAVE_OSSL``):
+
+* ``cryptography`` is not a declared dependency (``pyproject.toml``), so
+  on an executor without it this code is the only AES there is;
+* the corpus writer (``sources/pdf_writer.py``) encrypts the fixture
+  PDFs through these same entry points, so fixtures mint without it;
+* ``tests/test_kernel_pdf.py::test_aes_openssl_parity`` checks
+  OpenSSL's output against this code.
+
+Everything here derives from the public FIPS-197 spec; the S-box and
+GF(2^8) multiplication tables are COMPUTED at import from the field
+definition (multiplicative inverse + affine transform) rather than
+transcribed, and the round functions use the classic 32-bit T-table
+decomposition (one fused SubBytes+ShiftRows+MixColumns lookup per state
+byte).
 
 Two execution styles, matched to where each runs:
 

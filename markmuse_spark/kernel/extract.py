@@ -1,13 +1,16 @@
 """Unified extraction kernel: payload bytes -> assembled Markdown document.
 
-Per-document composition of the three kernel stages (the Spark operators in
-:mod:`markmuse_spark.operators.extract` call :func:`extract_document` per
-row from a ``mapInArrow`` iterator):
+Per-document composition of the kernel stages.  :func:`extract_document`
+is the one document entry point: both markdown operators in
+:mod:`markmuse_spark.operators.extract` call it per row from their shared
+``mapInArrow`` runner.
 
 1. dispatch on payload magic: ``%PDF`` -> PDF box-geometry extractor,
    otherwise HTML boilerplate-strip extractor
-2. deterministic MarkMuse tail (image map, link-rewrite join, page concat)
-   via :mod:`markmuse_spark.kernel.markdown_assembly`
+2. deterministic MarkMuse tail via
+   :mod:`markmuse_spark.kernel.markdown_assembly` — the plain one (image
+   map, link-rewrite join, page concat), or with ``captions`` the A11
+   enhanced one (caption injection, no global rewrite)
 
 Per-row errors are captured, never raised — the Spark analog of the
 reference's per-document try/except in the batch loop
@@ -20,7 +23,10 @@ from __future__ import annotations
 from typing import Any, Optional
 
 from markmuse_spark.kernel import html_extract, pdf_extract
-from markmuse_spark.kernel.markdown_assembly import assemble_one
+from markmuse_spark.kernel.markdown_assembly import (
+    assemble_one,
+    assemble_one_enhanced,
+)
 
 
 def extract_pages_sniffed(payload) -> list[dict[str, Any]]:
@@ -55,19 +61,32 @@ def _partial_note(pages: list[dict[str, Any]]) -> Optional[str]:
     return f"PartialExtraction: {n_damaged}/{len(pages)} pages damaged"
 
 
-def extract_document(url: str, payload: Optional[bytes]) -> dict[str, Any]:
+def extract_document(
+    url: str,
+    payload: Optional[bytes],
+    captions: Optional[dict[str, str]] = None,
+) -> dict[str, Any]:
     """Extract + assemble one document; errors land in the ``error``
     field.  A damaged-but-salvageable PDF (truncated download, corrupt
     stream) yields BOTH: the recovered pages' markdown and a
-    deterministic ``PartialExtraction`` error note."""
+    deterministic ``PartialExtraction`` error note.
+
+    ``captions`` selects the assembly tail: ``None`` takes the plain one
+    (:func:`assemble_one`); a dict, even an empty one, takes the A11
+    enhanced one (:func:`assemble_one_enhanced`: captioned refs gain the
+    analysis block, every other ref stays verbatim) and adds
+    ``n_enhanced`` to the row."""
     try:
         if payload is None or len(payload) == 0:
             raise ValueError("empty payload")
         # slice-compare inside the sniff, not startswith: payload may be
         # a zero-copy memoryview of the Arrow batch (PEP 3118 equality)
         pages = extract_pages_sniffed(payload)
-        doc = assemble_one(url, pages)
-        return {
+        if captions is None:
+            doc = assemble_one(url, pages)
+        else:
+            doc = assemble_one_enhanced(url, pages, captions)
+        row = {
             "url": url,
             "markdown": doc["markdown"],
             "extracted_text": doc["extracted_text"],
@@ -77,7 +96,8 @@ def extract_document(url: str, payload: Optional[bytes]) -> dict[str, Any]:
             "error": _partial_note(pages),
         }
     except Exception as exc:
-        return {
+        doc = {"n_enhanced": 0}
+        row = {
             "url": url,
             "markdown": None,
             "extracted_text": None,
@@ -86,38 +106,6 @@ def extract_document(url: str, payload: Optional[bytes]) -> dict[str, Any]:
             "n_chars": 0,
             "error": f"{type(exc).__name__}: {exc}",
         }
-
-
-def extract_document_enhanced(
-    url: str, payload: Optional[bytes], captions: Optional[dict[str, str]]
-) -> dict[str, Any]:
-    """Enhanced-mode variant (A11): same kernel dispatch, caption-injecting
-    assembly tail (``assemble_one_enhanced``)."""
-    from markmuse_spark.kernel.markdown_assembly import assemble_one_enhanced
-
-    try:
-        if payload is None or len(payload) == 0:
-            raise ValueError("empty payload")
-        pages = extract_pages_sniffed(payload)  # see extract_document
-        doc = assemble_one_enhanced(url, pages, captions)
-        return {
-            "url": url,
-            "markdown": doc["markdown"],
-            "extracted_text": doc["extracted_text"],
-            "n_pages": len(pages),
-            "n_images": len(doc["image_manifest"]),
-            "n_enhanced": doc["n_enhanced"],
-            "n_chars": len(doc["markdown"]),
-            "error": _partial_note(pages),
-        }
-    except Exception as exc:
-        return {
-            "url": url,
-            "markdown": None,
-            "extracted_text": None,
-            "n_pages": 0,
-            "n_images": 0,
-            "n_enhanced": 0,
-            "n_chars": 0,
-            "error": f"{type(exc).__name__}: {exc}",
-        }
+    if captions is not None:
+        row["n_enhanced"] = doc["n_enhanced"]
+    return row

@@ -1,4 +1,4 @@
-"""Production assembly kernel: the deterministic MarkMuse tail, batch-first.
+"""Production assembly kernel: the deterministic MarkMuse tail.
 
 Byte-identical to :mod:`markmuse_spark.golden.oracle` (the fixture mint) and
 therefore to the reference semantics at ``/root/reference/markmuse.py:307-383``
@@ -6,11 +6,14 @@ therefore to the reference semantics at ``/root/reference/markmuse.py:307-383``
 link rewrite), ``:477-479`` (plain text) — verified by
 ``tests/test_assembly_parity.py``.
 
-Written for Arrow-batch execution inside pandas UDFs: the entry point is
-:func:`assemble_batch`, which takes columnar inputs for a batch of documents
-and returns columnar outputs.  All regexes are compiled once at module load;
-per-document work is a single scan over the joined markdown plus one pass
-over the image list — no quadratic re-probing, no per-character Python.
+Called once per document from the operators' Arrow passes:
+:func:`assemble_one` (plain tail) and :func:`assemble_one_enhanced` (A11
+caption-injecting tail) through
+:func:`markmuse_spark.kernel.extract.extract_document`, and
+:func:`extract_images_one` from the images operator.  All regexes are
+compiled once at module load; per-document work is a single scan over the
+joined markdown plus one pass over the image list — no quadratic
+re-probing, no per-character Python.
 """
 
 from __future__ import annotations
@@ -293,24 +296,3 @@ def assemble_one_enhanced(
         "image_manifest": manifest,
         "n_enhanced": n_enhanced,
     }
-
-
-def assemble_batch(
-    urls: Iterable[str], pages_col: Iterable[list[dict[str, Any]]]
-) -> tuple[list[str], list[str], list[list[dict]], list[int]]:
-    """Columnar batch entry point for the Arrow/pandas UDF layer.
-
-    Returns parallel lists ``(markdown, extracted_text, manifests,
-    n_images)`` for the batch.
-    """
-    out_md: list[str] = []
-    out_text: list[str] = []
-    out_manifest: list[list[dict]] = []
-    out_n: list[int] = []
-    for url, pages in zip(urls, pages_col):
-        doc = assemble_one(url, pages or [])
-        out_md.append(doc["markdown"])
-        out_text.append(doc["extracted_text"])
-        out_manifest.append(doc["image_manifest"])
-        out_n.append(len(doc["image_manifest"]))
-    return out_md, out_text, out_manifest, out_n

@@ -6,6 +6,13 @@ payload column.  Everything around it (scan, projection, shuffle, write)
 stays declarative so Catalyst prunes columns and pushes filters into the
 parquet scan — the operator itself selects only ``(url, html)``.
 
+Both markdown operators run through one Arrow runner
+(:func:`_extract_arrow`): :func:`extract_markdown` feeds it
+``(url, payload)``, and :func:`extract_markdown_enhanced` (A11) adds a
+per-url caption map joined on url.  Only the kernel's assembly tail and
+the ``n_enhanced`` column differ by mode.  :func:`extract_images` is a
+separate 1->N flatten with no error rows and no metrics.
+
 Implementation is ``mapInArrow`` (not ``mapInPandas``): payloads go
 arrow -> python bytes -> kernel -> arrow with no intermediate pandas
 DataFrame, saving one full materialization of the multi-KB binary column in
@@ -23,13 +30,6 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 
 from markmuse_spark.kernel.extract import extract_document
-
-RESULT_DDL = (
-    "url string, markdown string, extracted_text string, n_pages int, "
-    "n_images int, n_chars long, error string, partition_id int"
-)
-
-_COLS = ("url", "markdown", "extracted_text", "n_pages", "n_images", "n_chars", "error")
 
 
 def _binary_views(col) -> list:
@@ -114,15 +114,17 @@ class PartitionMetricsParam(AccumulatorParam):
         return a
 
 
-def extract_markdown(
-    pages: DataFrame,
-    url_col: str = "url",
-    payload_col: str = "html",
-    metrics_acc=None,
-) -> DataFrame:
-    """Map the extraction kernel over (url, payload) with per-row error
-    capture (A19 analog: one bad document never kills the job) and the
-    executor partition id recorded for the lineage sidecar (A20 analog).
+def _extract_arrow(frame: DataFrame, enhanced: bool, metrics_acc) -> DataFrame:
+    """The one Arrow runner behind both markdown operators: maps
+    :func:`extract_document` over ``frame``'s ``(url, payload)`` columns,
+    plus a third ``url -> {img_id: description}`` map column when
+    ``enhanced``, with per-row error capture (A19 analog: one bad
+    document never kills the job) and the executor partition id recorded
+    for the lineage sidecar (A20 analog).
+
+    The output schema is built once here (``n_enhanced`` only in enhanced
+    mode); the kernel row's column list and the Spark schema both derive
+    from it.
 
     ``metrics_acc``: optional ``PartitionMetricsParam`` accumulator; when
     given, each task adds its partition's url/ok/err/char/image counts as
@@ -131,18 +133,24 @@ def extract_markdown(
     re-read is real money even column-pruned)."""
     import pyarrow as pa  # deferred: resolved on executors too
 
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("markdown", pa.string()),
-            ("extracted_text", pa.string()),
-            ("n_pages", pa.int32()),
-            ("n_images", pa.int32()),
-            ("n_chars", pa.int64()),
-            ("error", pa.string()),
-            ("partition_id", pa.int32()),
-        ]
-    )
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    fields = [
+        ("url", pa.string()),
+        ("markdown", pa.string()),
+        ("extracted_text", pa.string()),
+        ("n_pages", pa.int32()),
+        ("n_images", pa.int32()),
+    ]
+    if enhanced:
+        fields.append(("n_enhanced", pa.int32()))
+    fields += [
+        ("n_chars", pa.int64()),
+        ("error", pa.string()),
+        ("partition_id", pa.int32()),
+    ]
+    schema = pa.schema(fields)
+    names = schema.names[:-1]  # the kernel row's keys; partition_id is ours
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         from pyspark import TaskContext
@@ -153,11 +161,18 @@ def extract_markdown(
         for batch in batches:
             urls = batch.column(0).to_pylist()
             payloads = _binary_views(batch.column(1))
-            cols: tuple[list, ...] = ([], [], [], [], [], [], [])
-            for url, payload in zip(urls, payloads):
-                row = extract_document(url, payload)
-                for j, name in enumerate(_COLS):
-                    cols[j].append(row[name])
+            if enhanced:
+                # pyarrow map cells arrive as [(k, v), ...] or None; a page
+                # with no caption rows still takes the enhanced tail (refs
+                # verbatim), so it gets {} — None would select the plain one
+                caps = [dict(c) if c else {} for c in batch.column(2).to_pylist()]
+            else:
+                caps = [None] * len(urls)
+            cols: tuple[list, ...] = tuple([] for _ in names)
+            for url, payload, cap in zip(urls, payloads, caps):
+                row = extract_document(url, payload, cap)
+                for col, name in zip(cols, names):
+                    col.append(row[name])
                 n_rows += 1
                 n_err += row["error"] is not None
                 # partial-salvage rows (damaged PDFs whose intact pages
@@ -186,18 +201,19 @@ def extract_markdown(
                 }
             )
 
-    return pages.select(url_col, payload_col).mapInArrow(run, RESULT_DDL)
+    return frame.mapInArrow(run, from_arrow_schema(schema))
 
 
-ENHANCED_DDL = (
-    "url string, markdown string, extracted_text string, n_pages int, "
-    "n_images int, n_enhanced int, n_chars long, error string, partition_id int"
-)
-
-_ENH_COLS = (
-    "url", "markdown", "extracted_text", "n_pages", "n_images", "n_enhanced",
-    "n_chars", "error",
-)
+def extract_markdown(
+    pages: DataFrame,
+    url_col: str = "url",
+    payload_col: str = "html",
+    metrics_acc=None,
+) -> DataFrame:
+    """Map the extraction kernel over (url, payload): one row per document
+    with its markdown, counts, error and partition id (see
+    :func:`_extract_arrow` for error capture and ``metrics_acc``)."""
+    return _extract_arrow(pages.select(url_col, payload_col), False, metrics_acc)
 
 
 def deterministic_captions(pages: DataFrame, max_images_per_page: int = 4,
@@ -230,44 +246,17 @@ def extract_markdown_enhanced(
     url_col: str = "url",
     payload_col: str = "html",
     metrics_acc=None,
-    salt_parallelism: int | None = None,
 ) -> DataFrame:
     """A11 enhanced mode as a Spark operator: extraction + caption-injecting
-    assembly in one Arrow pass.
+    assembly in one Arrow pass; the columns of :func:`extract_markdown`
+    plus ``n_enhanced`` after ``n_images``.
 
     ``captions``: DataFrame ``(url, img_id, description)`` — the output of
     a (separate) captioning job.  It is grouped to one map per url and
     joined on url; at 10^12 rows this is a shuffle join co-partitioned on
     url (captions are small per url, never a cross product).  Pages without
-    captions take the left-outer path (nothing enhanced, refs verbatim).
-
-    ``salt_parallelism``: when set, the JOINED frame is re-shuffled with
-    the url-hash repartition the plain path uses
-    (:func:`markmuse_spark.plans.pipeline.salted_repartition`), which
-    fixes the extraction pass's task count independently of the join's
-    shuffle width.  This is a SECOND shuffle on top of the join's; with
-    the earlier size-salted rule it was measured on the adversarial
-    corpus (20k docs, local[8]) at 3.4 s vs 2.6-3.0 s for the plain
-    join.  Default off."""
-    import pyarrow as pa
-
+    captions take the left-outer path (nothing enhanced, refs verbatim)."""
     from pyspark.sql import functions as F
-
-    from markmuse_spark.kernel.extract import extract_document_enhanced
-
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("markdown", pa.string()),
-            ("extracted_text", pa.string()),
-            ("n_pages", pa.int32()),
-            ("n_images", pa.int32()),
-            ("n_enhanced", pa.int32()),
-            ("n_chars", pa.int64()),
-            ("error", pa.string()),
-            ("partition_id", pa.int32()),
-        ]
-    )
 
     cap_map = captions.groupBy(url_col).agg(
         F.map_from_entries(
@@ -275,59 +264,7 @@ def extract_markdown_enhanced(
         ).alias("_captions")
     )
     joined = pages.select(url_col, payload_col).join(cap_map, url_col, "left")
-    if salt_parallelism is not None:
-        from markmuse_spark.plans.pipeline import salted_repartition
-
-        joined = salted_repartition(joined, salt_parallelism, url_col=url_col)
-
-    def run(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        n_rows = n_err = n_partial = sum_chars = sum_images = 0
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            payloads = _binary_views(batch.column(1))
-            caps = batch.column(2).to_pylist()
-            cols: tuple[list, ...] = ([], [], [], [], [], [], [], [])
-            for url, payload, cap in zip(urls, payloads, caps):
-                # pyarrow map cells arrive as [(k, v), ...] or None
-                cap_d = dict(cap) if cap else None
-                row = extract_document_enhanced(url, payload, cap_d)
-                for j, name in enumerate(_ENH_COLS):
-                    cols[j].append(row[name])
-                n_rows += 1
-                n_err += row["error"] is not None
-                # partial-salvage rows (damaged PDFs whose intact pages
-                # shipped) are a SUBSET of err_count — split out so an
-                # operator dashboard can tell "kept with disclosure"
-                # from "dead row" at a glance
-                n_partial += (row["error"] or "").startswith(
-                    "PartialExtraction:"
-                )
-                sum_chars += row["n_chars"]
-                sum_images += row["n_images"]
-            arrays = [
-                pa.array(c, type=schema.field(i).type) for i, c in enumerate(cols)
-            ]
-            arrays.append(pa.array([pid] * len(urls), type=pa.int32()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
-        if metrics_acc is not None and n_rows:
-            metrics_acc.add(
-                {
-                    pid: {
-                        "url_count": n_rows,
-                        "ok_count": n_rows - n_err,
-                        "err_count": n_err,
-                        "partial_count": n_partial,
-                        "sum_chars": sum_chars,
-                        "sum_images": sum_images,
-                    }
-                }
-            )
-
-    return joined.mapInArrow(run, ENHANCED_DDL)
+    return _extract_arrow(joined, True, metrics_acc)
 
 
 IMAGES_DDL = (

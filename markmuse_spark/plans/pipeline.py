@@ -177,9 +177,7 @@ def run_extraction(
     url-hash repartition is skipped there: a second shuffle of the same
     rows only re-spreads them (with the earlier size-salted rule,
     measured on the adversarial corpus, 20k docs, local[8]: 3.4 s with
-    it vs 2.6-3.0 s without).
-    ``extract_markdown_enhanced(salt_parallelism=...)`` still adds it
-    for callers that want a fixed task count after the join."""
+    it vs 2.6-3.0 s without)."""
     started_at = _dt.datetime.now(_dt.timezone.utc)
     parallelism = spark.sparkContext.defaultParallelism
 

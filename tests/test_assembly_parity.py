@@ -2,7 +2,7 @@
 
 The oracle (markmuse_spark.golden.oracle) transcribes the reference tail
 semantics (markmuse.py:307-685); the kernel (markmuse_spark.kernel.
-markdown_assembly) is an independent batch implementation.  Every document —
+markdown_assembly) is an independent implementation.  Every document —
 hand-built edge cases and 300 seeded random ones — must match byte-for-byte.
 """
 
@@ -34,20 +34,6 @@ def test_edge_cases(doc):
 def test_random_corpus():
     for doc in fixtures.random_documents(300, seed=42):
         _assert_doc_parity(doc)
-
-
-def test_batch_matches_per_doc():
-    docs = fixtures.random_documents(50, seed=7)
-    urls = [d["url"] for d in docs]
-    md, text, manifests, n_imgs = kernel.assemble_batch(
-        urls, [d["pages"] for d in docs]
-    )
-    for i, d in enumerate(docs):
-        want = oracle.assemble_document(d["url"], d["pages"])
-        assert md[i] == want["markdown"]
-        assert text[i] == want["extracted_text"]
-        assert manifests[i] == want["image_manifest"]
-        assert n_imgs[i] == len(want["image_manifest"])
 
 
 # --- targeted pins for the nastiest rules -------------------------------

@@ -282,6 +282,74 @@ def test_enhanced_run_with_captions(spark, tmp_path):
     assert "**AI图片分析**：" in one["markdown"]
 
 
+# the operators' output schemas before they shared one runner, kept
+# verbatim as the reference the derived schemas must reproduce
+_RESULT_DDL = (
+    "url string, markdown string, extracted_text string, n_pages int, "
+    "n_images int, n_chars long, error string, partition_id int"
+)
+_ENHANCED_DDL = (
+    "url string, markdown string, extracted_text string, n_pages int, "
+    "n_images int, n_enhanced int, n_chars long, error string, partition_id int"
+)
+
+
+def test_markdown_operator_schemas_match_reference_ddl(spark):
+    """Both markdown operators keep their column names, types and order:
+    the plain one exactly ``_RESULT_DDL``, the enhanced one the same plus
+    ``n_enhanced`` after ``n_images``."""
+    from markmuse_spark.operators.extract import (
+        deterministic_captions,
+        extract_markdown_enhanced,
+    )
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    pages = corpus.pages_dataframe(spark, 4, seed=42, partitions=1)
+    enhanced = extract_markdown_enhanced(pages, deterministic_captions(pages))
+    for df, ddl in ((extract_markdown(pages), _RESULT_DDL), (enhanced, _ENHANCED_DDL)):
+        assert fields(df.schema) == fields(spark.createDataFrame([], ddl).schema)
+
+
+def test_enhanced_uncaptioned_pages_take_the_enhanced_tail(spark):
+    """A page with no caption rows reaches the runner as a null caption
+    map; it must still take the enhanced tail (refs verbatim, no global
+    rewrite, ``n_enhanced == 0``), not the plain one that rewrites refs."""
+    from markmuse_spark.golden import oracle
+    from markmuse_spark.operators.extract import (
+        deterministic_captions,
+        extract_markdown_enhanced,
+    )
+
+    n = 40
+    pages = corpus.pages_dataframe(spark, n, seed=42, partitions=2)
+    captioned = [corpus.row_url(i) for i in range(0, n, 2)]
+    caps = deterministic_captions(pages).filter(F.col("url").isin(captioned))
+    enh = {r["url"]: r for r in extract_markdown_enhanced(pages, caps).collect()}
+    plain = {r["url"]: r["markdown"] for r in extract_markdown(pages).collect()}
+    assert len(enh) == len(plain) == n
+    assert sum(enh[u]["n_enhanced"] for u in captioned) > 0
+
+    n_checked = n_differ = 0
+    for i in range(1, n, 2):
+        url, _payload, expected, _err = corpus._make_doc(i, 42)
+        got = enh[url]
+        assert got["n_enhanced"] == 0, url
+        if expected is None:  # hard error: no markdown either way
+            assert got["markdown"] is None and plain[url] is None, url
+            continue
+        want = oracle.assemble_document_enhanced(url, expected, {})
+        assert got["markdown"] == want["markdown"], url
+        assert got["extracted_text"] == want["extracted_text"], url
+        assert got["n_images"] == len(want["image_manifest"]), url
+        n_checked += 1
+        n_differ += got["markdown"] != plain[url]
+    # the plain tail rewrites image refs, so some uncaptioned docs must
+    # read differently from the plain operator's row for the same url
+    assert n_checked and n_differ
+
+
 def test_binary_views_are_zero_copy_and_null_safe():
     """The Arrow payload accessor must slice the batch's data buffer
     (no per-cell bytes copy) and round-trip nulls/empties/content
