@@ -155,8 +155,8 @@ _TD = [
 # final decrypt round: InvSubBytes only, as word-positioned lookups
 _IS = [INV_SBOX.astype(np.uint32) << (8 * k) for k in range(4)]
 
-# which column each row-byte is gathered from, per output column 0..3
-_ENC_GATHER = [[(c + r) % 4 for c in range(4)] for r in range(4)]
+# decrypt (InvShiftRows): which column each row-byte is gathered from, per
+# output column 0..3
 _DEC_GATHER = [[(c - r) % 4 for c in range(4)] for r in range(4)]
 
 _RCON = [1]

@@ -52,82 +52,19 @@ RUNS_SCHEMA = (
 )
 
 
-def committed_urls(
-    spark: SparkSession, output_dir: str, source: str = "listing"
-) -> Optional[DataFrame]:
-    """Urls from previously *committed* runs.
-
-    ``source="listing"`` (default): run dirs bearing ``_SUCCESS``.  The
-    listing goes through the Hadoop FileSystem API (resolved from the
-    run root's own scheme), NOT ``os.listdir`` — the same code path then
-    works against file://, hdfs://, s3a:// and every other configured
-    store; round 2's local-FS walk was a 100x-scale liability.  The run
-    count is small (one directory status per run), so a driver-side
-    listing is fine.
-
-    ``source="sidecar"``: committed run ids come from the
-    ``extraction_runs`` lineage sidecar (A20) instead — the job-level
-    SUCCESS row (``partition_id = -1``) is written only AFTER the run
-    directory's committer succeeded, so sidecar-SUCCESS implies
-    dir-committed.  This is the extreme-run-count path: one bounded
-    parquet read + a driver-side collect of run ids (one tiny row per
-    run) replaces a per-run-dir FileStatus round trip against the
-    object store.
-
-    Sidecar-mode caveat (the trade for skipping the listing): a run
-    that crashed between its data commit and its sidecar append is
-    re-listed as TODO and re-extracted under a FRESH run id (the
-    ``errorifexists`` run-dir mode keeps the retry from clobbering the
-    orphan), so ``extracted/`` can then hold the same url under two run
-    dirs.  Downstream readers of ``extracted/`` in sidecar-resume
-    deployments must therefore dedupe by url (keep max ``run_id``) — or
-    close the window entirely by resuming with ``source="listing"``,
-    which sees the orphaned ``_SUCCESS`` directory the sidecar missed.
-    Callers should pass fresh run ids, exactly as the listing source
-    already requires."""
+def committed_urls(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
+    """Urls from previously *committed* runs: run dirs bearing
+    ``_SUCCESS``.  The listing goes through the Hadoop FileSystem API
+    (resolved from the run root's own scheme), NOT ``os.listdir`` — the
+    same code path then works against file://, hdfs://, s3a:// and every
+    other configured store; round 2's local-FS walk was a 100x-scale
+    liability.  The run count is small (one directory status per run),
+    so a driver-side listing is fine."""
     jvm = spark._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path
     root = HPath(output_dir, "extracted")
     fs = root.getFileSystem(hconf)
-    if source == "sidecar":
-        runs_root = HPath(output_dir, "extraction_runs")
-        if not fs.exists(runs_root):
-            return None
-        run_ids = [
-            r["run_id"]
-            for r in (
-                spark.read.parquet(runs_root.toString())
-                .filter(
-                    (F.col("partition_id") == -1)
-                    & (F.col("status") == "SUCCESS")
-                )
-                .select("run_id")
-                .distinct()
-                .collect()
-            )
-        ]
-        good = [
-            HPath(root, f"run_id={rid}").toString() for rid in sorted(run_ids)
-        ]
-        if not good:
-            return None
-        try:
-            return spark.read.parquet(*good).select("url")
-        except Exception:
-            # a SUCCESS sidecar row without a run directory is legitimate
-            # state, not corruption: Iceberg-committed runs write to the
-            # table (their urls resume through the table, not here), and
-            # retention cleanup deletes old run dirs — exactly the
-            # extreme-run-count regime this mode targets.  Fall back to
-            # per-path existence filtering only on failure, so the happy
-            # path stays a single bulk read with zero per-run probes.
-            present = [p for p in good if fs.exists(HPath(p))]
-            if not present:
-                return None
-            return spark.read.parquet(*present).select("url")
-    if source != "listing":
-        raise ValueError(f"unknown resume source {source!r}")
     if not fs.exists(root):
         return None
     good = []
@@ -159,7 +96,6 @@ def run_extraction(
     output_dir: str,
     run_id: str,
     resume: bool = True,
-    resume_source: str = "listing",
     iceberg_table: Optional[str] = None,
     captions: Optional[DataFrame] = None,
 ) -> dict:
@@ -183,7 +119,7 @@ def run_extraction(
 
     todo = pages
     if resume:
-        done = committed_urls(spark, output_dir, source=resume_source)
+        done = committed_urls(spark, output_dir)
         if done is not None:
             todo = todo.join(done, "url", "left_anti")
 

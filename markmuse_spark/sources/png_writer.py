@@ -25,7 +25,6 @@ import hashlib
 import struct
 import zlib
 
-_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 _COLOR_TYPE_BY_CHANNELS = {1: 0, 2: 4, 3: 2, 4: 6}
 
 

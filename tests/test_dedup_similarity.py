@@ -517,7 +517,9 @@ def test_bucket_warn_costs_zero_jobs_and_rides_the_join_plan(spark, docs):
     """Round-7 ask #7: default-on warn observability must cost ZERO extra
     Spark jobs — building the miner plan launches nothing (round 6 ran an
     eager ``.first()`` per call), and the metrics collection rides the
-    self-join side as a CollectMetrics node over the join-key window."""
+    self-join side as a CollectMetrics node over a broadcast join-back of
+    the oversized-group count, all of which runs inside the caller's own
+    first action."""
     sc = spark.sparkContext
     sc.setJobGroup("warn-lazy-probe", "plan construction must launch no jobs")
     try:
@@ -527,8 +529,8 @@ def test_bucket_warn_costs_zero_jobs_and_rides_the_join_plan(spark, docs):
         sc.setJobGroup("", "")
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CollectMetrics" in plan
-    # the observation's window partitions by the SAME keys the self-join
-    # exchanges on — no exchange beyond the two join sides + the doc_a fold
+    # the candidate-pair dedup folds into the doc_a exchange
+    # (repartition(doc_a).dropDuplicates): no (doc_a, doc_b) exchange
     import re as _re
 
     assert not _re.search(r"hashpartitioning\(doc_a#\d+L, doc_b", plan)

@@ -380,36 +380,29 @@ def test_binary_views_are_zero_copy_and_null_safe():
     assert row["error"] is None and "hi" in row["markdown"]
 
 
-def test_sidecar_resume_matches_listing_resume(spark, tmp_path):
-    """resume_source='sidecar' (A20-driven, the extreme-run-count path)
-    must skip exactly the runs the _SUCCESS listing would skip, and a
-    FAILURE sidecar row must not mark its run as done."""
+def test_resume_skips_committed_runs_not_failed_ones(spark, tmp_path):
+    """Resume skips exactly the urls of _SUCCESS-committed runs: an
+    incremental run extracts only the new urls, and a failed run (which
+    leaves a FAILURE lineage row and no committed run dir) marks nothing
+    as done."""
     out = str(tmp_path / "out")
     first = corpus.pages_dataframe(spark, 120, seed=42, partitions=4)
     pipeline.run_extraction(spark, first, out, run_id="s1")
     full = corpus.pages_dataframe(spark, 200, seed=42, partitions=4)
-    job2 = pipeline.run_extraction(
-        spark, full, out, run_id="s2", resume_source="sidecar"
-    )
+    job2 = pipeline.run_extraction(spark, full, out, run_id="s2")
     assert job2["url_count"] == 80  # only the new urls
-    # a failed run (Iceberg append without a catalog) leaves a FAILURE
-    # sidecar row — the sidecar source must not treat it as committed
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError):
         pipeline.run_extraction(
             spark, full, out, run_id="s3", iceberg_table="nocat.db.t"
         )
-    job4 = pipeline.run_extraction(
-        spark, full, out, run_id="s4", resume_source="sidecar"
-    )
+    job4 = pipeline.run_extraction(spark, full, out, run_id="s4")
     assert job4["url_count"] == 0  # s1+s2 cover everything; s3 added none
     assert (
         spark.read.parquet(f"{out}/extracted").select("url").distinct().count()
         == 200
     )
-    with _pytest.raises(ValueError, match="unknown resume source"):
-        pipeline.committed_urls(spark, out, source="nonsense")
 
 
 def test_binary_views_large_string_offsets():
@@ -427,8 +420,9 @@ def test_binary_views_large_string_offsets():
 
 
 def test_sidecar_resume_tolerates_missing_run_dir(spark, tmp_path):
-    """A SUCCESS sidecar row whose run dir was retention-cleaned (or
-    Iceberg-committed) must not crash the resume read (review catch)."""
+    """A run whose dir was retention-cleaned still has its SUCCESS
+    lineage sidecar row; resume follows the _SUCCESS listing, so the
+    read neither crashes nor counts the deleted run's urls."""
     import shutil as _sh
 
     out = str(tmp_path / "out")
@@ -439,10 +433,9 @@ def test_sidecar_resume_tolerates_missing_run_dir(spark, tmp_path):
         corpus.pages_dataframe(spark, 90, seed=42, partitions=4),
         out,
         run_id="g2",
-        resume_source="sidecar",
     )
     _sh.rmtree(f"{out}/extracted/run_id=g1")  # retention cleanup
-    done = pipeline.committed_urls(spark, out, source="sidecar")
+    done = pipeline.committed_urls(spark, out)
     assert done.count() == 30  # g2's increment only; no crash
 
 
