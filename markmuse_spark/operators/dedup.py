@@ -37,8 +37,6 @@ while joins, grouping and verification set-intersections stay JVM-side.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -69,9 +67,9 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 def _default_parallelism(spark) -> int:
     """Target UDF width, Spark-Connect-safe.  ``sparkContext`` raises
     ``PySparkAttributeError`` under Connect (round-7 review finding: the
-    unguarded access crashed plan builds before the pure-Python file
-    probe could even run); fall back to the shuffle-partition conf —
-    the session's own statement of how wide an exchange should be."""
+    unguarded access crashed plan builds); fall back to the
+    shuffle-partition conf — the session's own statement of how wide an
+    exchange should be."""
     try:
         return spark.sparkContext.defaultParallelism
     except Exception:
@@ -81,62 +79,34 @@ def _default_parallelism(spark) -> int:
             return 200  # Spark's shuffle-partition default
 
 
-#: bytes of UDF input one task should own before extra width stops
-#: paying (round-8 measurement: the sf0.1 shingle UDF's whole input is
-#: ~1.5 MB / ~0.12 s of single-core work, and the blanket
-#: default-parallelism repartition cost ~0.9 s of task-dispatch/Arrow
-#: overhead across 32 near-empty partitions — width 4-8 was optimal).
-#: Scale-adaptive by construction: width grows linearly with input
-#: bytes until it hits the cluster's parallelism, and genuinely wide
-#: inputs never reach the repartition at all (the provably-wide
-#: early-out).  ``$MARKMUSE_UDF_SPLIT_BYTES`` overrides it, read on each
-#: call, for hosts whose per-task overhead differs.
-_UDF_SPLIT_BYTES = 256 * 1024
-
-
-def _parallelize_for_udf(df: DataFrame, width: "int | None" = None) -> DataFrame:
+def _parallelize_for_udf(df: DataFrame) -> DataFrame:
     """At least default-parallelism partitions before an expensive Arrow
-    UDF.  ``width``: explicit caller override (round 8) — frames with no
-    file provenance (persisted intermediates, generated corpora) cannot
-    be size-estimated here, and the blanket default-parallelism fan-out
-    costs real dispatch overhead on small frames; callers that KNOW
-    their frame's scale pass the width they mean.  A small parquet input arrives as FEW scan partitions
+    UDF.  A small parquet input arrives as FEW scan partitions
     (``files.maxPartitionBytes`` yields one partition per ~128 MB), and
     a narrow UDF stage inherits that — measured at sf0.1: the shingle
     UDF ran on ONE core of 32 and dominated the whole minhash query
     (5.1 s of 6.1 s).  Round-robin repartition of the slim (id, text)
     projection costs one small shuffle and buys full-width UDF
-    execution; it is a NO-OP whenever the source is already at least
-    as wide as the cluster, so at 10^12 docs (thousands of files) no
-    extra shuffle ever happens.
+    execution.
 
-    The scan width is estimated WITHOUT ``df.rdd`` (round-5 wart: the
-    RDD probe converted the whole logical plan to RDD lineage on every
-    plan build): ``df.inputFiles()`` resolves file-source scans from the
-    logical plan alone, and the scan partition count is then REPLICATED
-    from Spark's own packing formula (``FilePartition.maxSplitBytes``:
-    per-file cost = size + ``files.openCostInBytes``, split size =
-    ``min(maxPartitionBytes, max(openCost, totalCost/parallelism))``).
-    Since packing charges every file at least ``openCost``, any scan of
-    ``>= maxPartitionBytes/openCost * target`` files (32x target at the
-    defaults) is provably wide — no size probes; below that bound the
-    per-file size probes run pure-Python (``os.stat`` for ``file:``
-    URIs — Spark-Connect-safe; py4j Hadoop bridge only for remote
-    schemes when available), capped at 4x parallelism with the tail
-    extrapolated from the probed mean.  A frame
-    with no file provenance at all (``createDataFrame``, in-memory test
-    frames) just takes the repartition — a no-op-cost shuffle of a
-    small frame."""
+    The one exception is a scan that is provably at least as wide as
+    the cluster, so at 10^12 docs (thousands of files) no extra shuffle
+    ever happens.  Spark packs files into scan partitions charging every
+    file at least ``files.openCostInBytes`` and capping a split at
+    ``files.maxPartitionBytes`` (``FilePartition.maxSplitBytes``), so a
+    scan of ``>= maxPartitionBytes/openCost * target`` files (32x target
+    at the defaults) has at least ``target`` partitions.  The file list
+    comes from ``df.inputFiles()`` — the logical plan alone, never
+    ``df.rdd`` (round-5 wart: the RDD probe converted the whole plan to
+    RDD lineage on every plan build) and never a per-file size call.  A
+    frame with no file provenance (persisted intermediates,
+    ``createDataFrame``) takes the repartition."""
     spark = df.sparkSession
     target = _default_parallelism(spark)
-    if width is not None:
-        return df.repartition(min(width, target))
     try:
-        files = df.inputFiles()
+        n_files = len(df.inputFiles())
     except Exception:  # exotic plans (pure streaming sources): be wide
-        return df.repartition(target)
-    if not files:
-        return df.repartition(target)
+        n_files = 0
     from markmuse_spark.operators.similarity import _parse_byte_conf
 
     max_split = max(1, _parse_byte_conf(
@@ -145,94 +115,9 @@ def _parallelize_for_udf(df: DataFrame, width: "int | None" = None) -> DataFrame
     open_cost = max(1, _parse_byte_conf(
         spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
     ))
-    # every file costs >= open_cost, and a split never exceeds max_split:
-    # n_files * open_cost / max_split >= target  =>  provably wide
-    if len(files) * open_cost >= target * max_split:
+    if n_files * open_cost >= target * max_split:
         return df
-    # bounded size probe (ADVICE round 6: the per-file status calls are
-    # serial driver RPCs on remote stores — cap them at 4x parallelism and
-    # extrapolate the tail from the probed mean; the provably-wide
-    # early-out above already bounds this branch at 32x-target files)
-    # strided slice, not the listing head (ADVICE r7): ordered listings
-    # whose leading files are systematically small/large would skew the
-    # extrapolated mean; a spread sample reflects the whole listing
-    n_probe = max(1, 4 * target)
-    probe = files[:: max(1, len(files) // n_probe)][:n_probe]
-    sizes = _probe_file_sizes(probe, spark)
-    if sizes is None:
-        # no pure-Python handler for the scheme and no py4j bridge
-        # (Spark Connect): only sub-provably-wide inputs reach here, and
-        # the round-robin is a cheap reshuffle of a small-by-construction
-        # frame — prefer full UDF width over a maybe-narrow stage
-        return df.repartition(target)
-    total_bytes = sum(sizes)
-    if len(files) > len(probe):  # extrapolate the unprobed tail
-        total_bytes = total_bytes * len(files) // len(probe)
-    total_cost = total_bytes + open_cost * len(files)
-    split = min(max_split, max(open_cost, total_cost // max(1, target)))
-    est_partitions = -(-total_cost // split)
-    if est_partitions >= target:
-        return df
-    # sub-cluster-width scan: repartition, but SIZE-AWARE (round 8,
-    # guide §2) — one task per ``_UDF_SPLIT_BYTES`` of input rather than
-    # a blanket ``target``: a 1.5 MB frame fanned out to 32 near-empty
-    # partitions paid ~0.9 s of dispatch/Arrow overhead for ~0.12 s of
-    # UDF work.  Width still reaches ``target`` as soon as the input is
-    # big enough to keep every core busy, so nothing changes at scale.
-    split_bytes = int(os.environ.get("MARKMUSE_UDF_SPLIT_BYTES", _UDF_SPLIT_BYTES))
-    width = min(target, max(1, -(-total_bytes // split_bytes)))
-    # the packing formula over-counts open-cost-dominated (tiny-file)
-    # scans — a single small file reads as 2 partitions when Spark packs
-    # it into 1; bound the estimate by the file count (tiny files pack
-    # ~1 per split) and the byte-split count (big files split by
-    # maxPartitionBytes) before deciding the scan is already wide enough
-    scan_width = min(
-        est_partitions, max(len(files), int(total_bytes // max_split))
-    )
-    if width <= scan_width:
-        return df  # the scan is already at least as wide as the data merits
-    return df.repartition(width)
-
-
-def _probe_file_sizes(files: list[str], spark) -> "list[int] | None":
-    """File sizes for the scan-width estimate, pure Python first.
-
-    ``file:`` URIs (and bare paths) go through ``os.stat`` — no JVM
-    access, so the plan-build path works under Spark Connect, where
-    ``spark._jvm`` does not exist (round-7 ask #5).  Other schemes fall
-    back to the py4j Hadoop ``FileSystem`` bridge when it is available;
-    when it is not, returns ``None`` and the caller repartitions.
-    Unreadable files count as size 0 (same as the round-6 behavior)."""
-    import os as _os
-    from urllib.parse import unquote, urlparse
-
-    sizes: list = []
-    remote_idx: list[int] = []
-    for i, f in enumerate(files):
-        parsed = urlparse(f)
-        if parsed.scheme in ("file", ""):
-            path = unquote(parsed.path) if parsed.scheme == "file" else f
-            try:
-                sizes.append(_os.stat(path).st_size)
-            except OSError:
-                sizes.append(0)
-        else:
-            sizes.append(0)
-            remote_idx.append(i)
-    if remote_idx:
-        try:  # classic py4j session only; Spark Connect has neither attr
-            jvm = spark._jvm
-            hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            HPath = jvm.org.apache.hadoop.fs.Path
-        except Exception:
-            return None
-        for i in remote_idx:
-            p = HPath(files[i])
-            try:
-                sizes[i] = int(p.getFileSystem(hconf).getFileStatus(p).getLen())
-            except Exception:
-                sizes[i] = 0
-    return sizes
+    return df.repartition(target)
 
 
 #: seed of the MinHash permutation family (multipliers and offsets)
@@ -310,19 +195,15 @@ def _band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
     ).reshape(n_docs, bands)
 
 
-def _slim(docs: DataFrame, id_col: str, text_col: str, udf_width) -> DataFrame:
+def _slim(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """``(doc_id, _t)`` projection a shingle pass reads, spread over
     enough partitions (:func:`_parallelize_for_udf`)."""
     return _parallelize_for_udf(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")),
-        width=udf_width,
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
     )
 
 
-def _shingled(
-    docs: DataFrame, id_col: str, text_col: str, n: int,
-    udf_width: "int | None" = None,
-) -> DataFrame:
+def _shingled(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc_id, shingles) with empty-shingle docs dropped, in ONE
     ``mapInArrow`` pass.
 
@@ -335,7 +216,7 @@ def _shingled(
     UDF twice per document."""
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    slim = _slim(docs, id_col, text_col, udf_width)
+    slim = _slim(docs, id_col, text_col)
 
     def run(batches):
         import pyarrow as pa
@@ -413,14 +294,8 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     max_band_size: int | None = None,
     warn_band_size: int | None = DEFAULT_WARN_BUCKET_SIZE,
-    udf_width: int | None = None,
 ) -> DataFrame:
     """Banded-LSH candidate pairs, verified with exact Jaccard.
-
-    ``udf_width``: explicit shingle-pass parallelism for inputs whose
-    size :func:`_parallelize_for_udf` cannot estimate (no file
-    provenance — persisted intermediates, generated corpora); default
-    keeps the size-aware rule.
 
     rows/band = num_perm/bands; candidate iff any band hash collides.
     The verification joins back to the shingle arrays so the reported
@@ -439,10 +314,13 @@ def minhash_lsh_pairs(
     acceptable (exact dedup catches identical docs first), which is why
     the cap composes with :func:`exact_duplicates` upstream.
 
-    ``warn_band_size``: DEFAULT-ON warn-only observability (one cheap
-    aggregate over the persisted frame; logs any (band_id, band_hash)
-    group over the soft threshold, drops nothing — the exported oracles
-    are byte-identical with it on).  ``None`` disables.
+    ``warn_band_size``: DEFAULT-ON warn-only observability: logs any
+    (band_id, band_hash) group over the soft threshold and drops
+    nothing — the exported oracles are byte-identical with it on.  Not
+    cheap: it adds a group count over the band keys with its own
+    exchange, a broadcast join-back and a ``CollectMetrics`` node to one
+    side of the self-join, about 20% of the MinHash stage (ROADMAP open
+    item "The default-on LSH band warn").  ``None`` disables.
 
     Shingles, MinHash signatures and band keys come from ONE
     ``mapInArrow`` pass (:func:`_shingle_batch`, :func:`_minhash`,
@@ -467,7 +345,7 @@ def minhash_lsh_pairs(
 
     from markmuse_spark.plans.cache import tracked_persist
 
-    slim = _slim(docs, id_col, text_col, udf_width)
+    slim = _slim(docs, id_col, text_col)
 
     def run(batches):
         import pyarrow as pa

@@ -267,13 +267,6 @@ def extract_markdown_enhanced(
     return _extract_arrow(joined, True, metrics_acc)
 
 
-IMAGES_DDL = (
-    "url string, page_idx int, img_idx int, img_id string, "
-    "safe_filename string, rel_path string, content_type string, "
-    "n_bytes long, data binary"
-)
-
-
 def extract_images(
     pages: DataFrame, url_col: str = "url", payload_col: str = "html"
 ) -> DataFrame:
@@ -284,6 +277,8 @@ def extract_images(
     (a document yields its image rows directly); partition by url prefix
     or date at the sink for 10^12-scale layouts."""
     import pyarrow as pa
+
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from markmuse_spark.kernel.extract import extract_pages_sniffed
     from markmuse_spark.kernel.markdown_assembly import extract_images_one
@@ -326,4 +321,6 @@ def extract_images(
                 schema=schema,
             )
 
-    return pages.select(url_col, payload_col).mapInArrow(run, IMAGES_DDL)
+    return pages.select(url_col, payload_col).mapInArrow(
+        run, from_arrow_schema(schema)
+    )

@@ -58,8 +58,12 @@ def committed_urls(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
     (resolved from the run root's own scheme), NOT ``os.listdir`` — the
     same code path then works against file://, hdfs://, s3a:// and every
     other configured store; round 2's local-FS walk was a 100x-scale
-    liability.  The run count is small (one directory status per run),
-    so a driver-side listing is fine."""
+    liability.  The listing itself is driver-side, one ``_SUCCESS``
+    status call per run dir.  The read is not: once there are more run
+    dirs than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32 by default), ``spark.read.parquet(*paths)`` lists them in a
+    Spark job with one task per run dir, so resume cost grows with the
+    number of committed runs (~4 s at 500 runs on local FS)."""
     jvm = spark._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path

@@ -1228,11 +1228,6 @@ def p_corpus_curation(spark, sf_dir):
     pairs = minhash_lsh_pairs(
         survivors, id_col="url", text_col="markdown",
         num_perm=64, bands=32, threshold=0.5,
-        # the survivor frame is a persisted intermediate (no file
-        # provenance, so the size-aware width rule can't see it) of a
-        # 200-doc corpus — match the corpus's width instead of fanning
-        # the shingle pass out to 32 near-empty tasks
-        udf_width=partitions,
     )
     dominated = pairs.select(F.col("doc_b").alias("url")).distinct()
     return (

@@ -686,11 +686,11 @@ def test_parse_byte_conf_units():
 
 def test_parallelize_for_udf_widens_without_rdd_probe(spark, tmp_path, monkeypatch):
     """Round-6 ask #7: the narrow-scan widen guard must never touch
-    ``df.rdd`` (plan-to-RDD conversion per call); width comes from
-    inputFiles + file sizes.  A one-file parquet scan still widens to
-    default parallelism; an in-memory frame does too; and the guard runs
-    with the rdd property booby-trapped."""
-    from pyspark.sql import DataFrame
+    ``df.rdd`` (plan-to-RDD conversion per call), and round-7 ask #5:
+    nor ``spark._jvm`` (absent under Spark Connect); the width decision
+    reads only ``inputFiles`` and two confs.  A one-file parquet scan
+    widens to default parallelism, and so does an in-memory frame."""
+    from pyspark.sql import DataFrame, SparkSession
 
     p = str(tmp_path / "docs")
     spark.range(0, 1000).selectExpr(
@@ -699,14 +699,15 @@ def test_parallelize_for_udf_widens_without_rdd_probe(spark, tmp_path, monkeypat
     df = spark.read.parquet(p)
     local = spark.createDataFrame([(1, "a")], "doc_id long, text string")
 
-    def _trap(self):
-        raise AssertionError("_parallelize_for_udf touched df.rdd")
+    def _trap(what):
+        def raise_(self):
+            raise AssertionError(f"_parallelize_for_udf touched {what}")
+
+        return property(raise_)
 
     with monkeypatch.context() as m:
-        m.setattr(DataFrame, "rdd", property(_trap))
-        # split=1 byte: any probed size merits full width (the round-8
-        # size-aware rule otherwise keeps a KB-scale scan narrow)
-        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", "1")
+        m.setattr(DataFrame, "rdd", _trap("df.rdd"))
+        m.setattr(SparkSession, "_jvm", _trap("spark._jvm"), raising=False)
         wide = dedup._parallelize_for_udf(df)
         wide_local = dedup._parallelize_for_udf(local)
     target = spark.sparkContext.defaultParallelism
@@ -714,85 +715,36 @@ def test_parallelize_for_udf_widens_without_rdd_probe(spark, tmp_path, monkeypat
     assert wide_local.rdd.getNumPartitions() == target
 
 
-def test_parallelize_for_udf_width_is_size_aware(spark, tmp_path, monkeypatch):
-    """Round-8 optimization contract: a sub-cluster-width scan widens to
-    ~input_bytes / _UDF_SPLIT_BYTES tasks, not blindly to default
-    parallelism (32 near-empty partitions cost ~0.9 s of dispatch/Arrow
-    overhead for ~0.12 s of UDF work at sf0.1), and the width caps at
-    default parallelism for big inputs.  An explicit ``width`` hint
-    overrides the estimate (no-provenance persisted frames)."""
-    p = str(tmp_path / "docs")
-    spark.range(0, 1000).selectExpr(
-        "id as doc_id", "repeat('w ', 20) as text"
-    ).coalesce(1).write.parquet(p)
-    df = spark.read.parquet(p)
-    import glob as _glob
-    import os as _os
-
-    nbytes = sum(
-        _os.path.getsize(f) for f in _glob.glob(p + "/*.parquet")
-    )
+def test_parallelize_for_udf_keeps_provably_wide_scan(spark, tmp_path):
+    """A scan of ``target * maxPartitionBytes / openCostInBytes`` files
+    or more has at least ``target`` scan partitions, so the guard
+    returns it unchanged (no extra shuffle at 10^12 docs); one file
+    fewer and it is repartitioned to ``target``."""
     target = spark.sparkContext.defaultParallelism
-    # split sized so the expected width is 2 (> scan's 1, < target)
-    with monkeypatch.context() as m:
-        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", str(max(1, (nbytes + 1) // 2)))
-        sized = dedup._parallelize_for_udf(df)
-    assert sized.rdd.getNumPartitions() == 2
-    # huge split: the scan's own width already covers the data — no shuffle
-    with monkeypatch.context() as m:
-        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", str(10 * nbytes))
-        untouched = dedup._parallelize_for_udf(df)
-    assert untouched.rdd.getNumPartitions() == df.rdd.getNumPartitions()
-    # explicit hint wins, capped at parallelism
-    assert dedup._parallelize_for_udf(df, width=3).rdd.getNumPartitions() == 3
-    assert (
-        dedup._parallelize_for_udf(df, width=10**6).rdd.getNumPartitions()
-        == target
-    )
-
-
-def test_parallelize_probe_is_pure_python_for_file_uris(
-    spark, tmp_path, monkeypatch
-):
-    """Round-7 ask #5: the small-scan size probe must not reach into
-    py4j internals (``spark._jvm`` does not exist under Spark Connect).
-    ``file:`` URIs go through ``os.stat``; a remote scheme with no py4j
-    bridge returns None and the caller falls back to a plain widen."""
-    from pyspark.sql import SparkSession
-
     p = str(tmp_path / "docs")
-    spark.range(0, 500).selectExpr(
+    spark.range(0, 10 * target).selectExpr(
         "id as doc_id", "repeat('w ', 20) as text"
-    ).coalesce(1).write.parquet(p)
-    df = spark.read.parquet(p)
-
-    class _NoJvm:
-        def __getattr__(self, name):  # Spark Connect: no _jvm, no _jsc
-            raise AttributeError(name)
-
-    # branch 1: file: URIs — probe succeeds with the JVM bridge trapped
-    with monkeypatch.context() as m:
-        m.setattr(
-            SparkSession, "_jvm",
-            property(lambda self: (_ for _ in ()).throw(
-                AssertionError("probe touched spark._jvm for file: URIs"))),
-            raising=False,
-        )
-        sizes = dedup._probe_file_sizes(df.inputFiles(), spark)
-        m.setenv("MARKMUSE_UDF_SPLIT_BYTES", "1")  # any size -> full width
-        wide = dedup._parallelize_for_udf(df)
-    assert sizes is not None and len(sizes) >= 1 and sizes[0] > 0
-    assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-
-    # branch 2: remote scheme, no bridge -> None (caller repartitions)
-    assert dedup._probe_file_sizes(
-        ["s3a://bucket/part-0.parquet"], _NoJvm()
-    ) is None
-
-    # branch 3: unreadable local file counts as size 0, never raises
-    assert dedup._probe_file_sizes(
-        ["file:///nonexistent/x.parquet", "/also/missing.parquet"], _NoJvm()
-    ) == [0, 0]
+    ).repartition(target).write.parquet(p)
+    files = sorted(
+        str(f) for f in (tmp_path / "docs").iterdir()
+        if f.name.endswith(".parquet")
+    )
+    assert len(files) == target
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "1m")
+        df = spark.read.parquet(*files)
+        assert dedup._parallelize_for_udf(df) is df
+        assert df.rdd.getNumPartitions() >= target
+        fewer = spark.read.parquet(*files[1:])
+        widened = dedup._parallelize_for_udf(fewer)
+        assert widened is not fewer
+        assert widened.rdd.getNumPartitions() == target
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_corpus_curation_minhash_stage_is_exact(spark):

@@ -312,6 +312,23 @@ def test_markdown_operator_schemas_match_reference_ddl(spark):
         assert fields(df.schema) == fields(spark.createDataFrame([], ddl).schema)
 
 
+# the images table's schema as it was spelled before it was derived from
+# the operator's Arrow schema
+_IMAGE_ROWS_DDL = (
+    "url string, page_idx int, img_idx int, img_id string, "
+    "safe_filename string, rel_path string, content_type string, "
+    "n_bytes long, data binary"
+)
+
+
+def test_images_operator_schema_matches_reference_ddl(spark):
+    """``extract_images`` keeps its column names, types and order."""
+    from markmuse_spark.operators.extract import extract_images
+
+    pages = corpus.pages_dataframe(spark, 4, seed=42, partitions=1)
+    assert extract_images(pages).schema == spark.createDataFrame([], _IMAGE_ROWS_DDL).schema
+
+
 def test_enhanced_uncaptioned_pages_take_the_enhanced_tail(spark):
     """A page with no caption rows reaches the runner as a null caption
     map; it must still take the enhanced tail (refs verbatim, no global
