@@ -290,8 +290,13 @@ def render_template(
     pipeline (the engine's A19 convention) pass ``on_undefined='null'``:
     affected rows render to NULL instead.
 
-    Arrow-batched pandas UDF (string assembly with per-row dict lookups is
-    not expressible as a JVM column over a dynamic map)."""
+    A scalar Python UDF (string assembly with per-row dict lookups is
+    not expressible as a JVM column over a dynamic map), and the one
+    ``pandas_udf`` in the package, which every other Python pass runs
+    as ``mapInArrow``: this is a public ``Column`` function, and
+    ``mapInArrow`` returns a DataFrame, not a Column.  The Arrow-native
+    scalar form, ``arrow_udf``, needs pyspark 4.1 and the package
+    declares ``pyspark>=3.5``."""
     import re as _re
 
     import pandas as pd

@@ -97,6 +97,21 @@ def _normalize_image(
     return img_id, safe, content_type, data
 
 
+def _kept_images(pages: Iterable[dict[str, Any]]):
+    """``(page_idx, img_idx, img_id, safe_filename, content_type, data)``
+    for every image :func:`_normalize_image` keeps, in ``pages`` order —
+    the one keep/drop walk behind the link index and the images table."""
+    for page in pages:
+        images = page.get("images")
+        if not images:
+            continue
+        page_no = page["page_idx"] + 1
+        for img_idx, img in enumerate(images):
+            res = _normalize_image(page_no, img_idx, img)
+            if res is not None:
+                yield (page["page_idx"], img_idx, *res)
+
+
 def build_image_index(
     pages: Iterable[dict[str, Any]], stem: str
 ) -> tuple[dict[str, str], list[dict]]:
@@ -110,28 +125,19 @@ def build_image_index(
     prefix = stem + "_images/"
     index: dict[str, str] = {}
     manifest: list[dict] = []
-    for page in pages:
-        images = page.get("images")
-        if not images:
-            continue
-        page_no = page["page_idx"] + 1
-        for img_idx, img in enumerate(images):
-            res = _normalize_image(page_no, img_idx, img)
-            if res is None:
-                continue
-            img_id, safe, content_type, data = res
-            target = prefix + safe
-            index[img_id] = target
-            if not _EXT7.search(img_id):
-                index[img_id + ".png"] = target
-            manifest.append(
-                {
-                    "img_id": img_id,
-                    "safe_filename": safe,
-                    "content_type": content_type,
-                    "n_bytes": len(data),
-                }
-            )
+    for _, _, img_id, safe, content_type, data in _kept_images(pages):
+        target = prefix + safe
+        index[img_id] = target
+        if not _EXT7.search(img_id):
+            index[img_id + ".png"] = target
+        manifest.append(
+            {
+                "img_id": img_id,
+                "safe_filename": safe,
+                "content_type": content_type,
+                "n_bytes": len(data),
+            }
+        )
     return index, manifest
 
 
@@ -204,34 +210,25 @@ def extract_images_one(url: str, pages: list[dict[str, Any]]) -> list[dict[str, 
     """The images OUTPUT rows for one document (A8/A14: the reference
     SAVES every kept image under ``{stem}_images/``, ``markmuse.py:436-451``
     — the engine's analog is an images table with the payload as a binary
-    column).  Same keep/drop rules as :func:`build_image_index` (default
-    ids, base64 repair, <100-byte reject, sanitize, 7-ext normalize)."""
+    column).  The same :func:`_kept_images` walk as
+    :func:`build_image_index` (default ids, base64 repair, <100-byte
+    reject, sanitize, 7-ext normalize)."""
     stem = derive_stem(url)
-    rows: list[dict[str, Any]] = []
-    for page in sorted(pages, key=lambda p: p["page_idx"]):
-        images = page.get("images")
-        if not images:
-            continue
-        page_no = page["page_idx"] + 1
-        for img_idx, img in enumerate(images):
-            res = _normalize_image(page_no, img_idx, img)
-            if res is None:
-                continue
-            img_id, safe, content_type, data = res
-            rows.append(
-                {
-                    "url": url,
-                    "page_idx": page["page_idx"],
-                    "img_idx": img_idx,
-                    "img_id": img_id,
-                    "safe_filename": safe,
-                    "rel_path": f"{stem}_images/{safe}",
-                    "content_type": content_type,
-                    "n_bytes": len(data),
-                    "data": data,
-                }
-            )
-    return rows
+    kept = _kept_images(sorted(pages, key=lambda p: p["page_idx"]))
+    return [
+        {
+            "url": url,
+            "page_idx": page_idx,
+            "img_idx": img_idx,
+            "img_id": img_id,
+            "safe_filename": safe,
+            "rel_path": f"{stem}_images/{safe}",
+            "content_type": content_type,
+            "n_bytes": len(data),
+            "data": data,
+        }
+        for page_idx, img_idx, img_id, safe, content_type, data in kept
+    ]
 
 
 def assemble_one_enhanced(

@@ -65,7 +65,7 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
 
 def _default_parallelism(spark) -> int:
-    """Target UDF width, Spark-Connect-safe.  ``sparkContext`` raises
+    """Target Python-pass width, Spark-Connect-safe.  ``sparkContext`` raises
     ``PySparkAttributeError`` under Connect (round-7 review finding: the
     unguarded access crashed plan builds); fall back to the
     shuffle-partition conf — the session's own statement of how wide an
@@ -80,14 +80,14 @@ def _default_parallelism(spark) -> int:
 
 
 def _parallelize_for_udf(df: DataFrame) -> DataFrame:
-    """At least default-parallelism partitions before an expensive Arrow
-    UDF.  A small parquet input arrives as FEW scan partitions
-    (``files.maxPartitionBytes`` yields one partition per ~128 MB), and
-    a narrow UDF stage inherits that — measured at sf0.1: the shingle
-    UDF ran on ONE core of 32 and dominated the whole minhash query
-    (5.1 s of 6.1 s).  Round-robin repartition of the slim (id, text)
-    projection costs one small shuffle and buys full-width UDF
-    execution.
+    """At least default-parallelism partitions before an expensive
+    ``mapInArrow`` pass.  A small parquet input arrives as FEW scan
+    partitions (``files.maxPartitionBytes`` yields one partition per
+    ~128 MB), and a narrow Python stage inherits that — measured at
+    sf0.1: the shingle pass ran on ONE core of 32 and dominated the
+    whole minhash query (5.1 s of 6.1 s).  Round-robin repartition of
+    the slim (id, text) projection costs one small shuffle and buys
+    full-width Python execution.
 
     The one exception is a scan that is provably at least as wide as
     the cluster, so at 10^12 docs (thousands of files) no extra shuffle
@@ -124,12 +124,23 @@ def _parallelize_for_udf(df: DataFrame) -> DataFrame:
 _MINHASH_SEED = 12345
 
 
+def _word_ngrams(text, n: int) -> list[str]:
+    """Word n-grams of ``text``: lower, split on ' ', drop empty tokens,
+    ``' '``-joined n-grams in order (repeats kept).  ``[]`` for NULL text
+    or fewer than ``n`` tokens.  The one tokenizer of every shingle,
+    SimHash and repetition pass — the semantics the d_ngram_jaccard and
+    t_repetition DuckDB oracles pin."""
+    if text is None:
+        return []
+    toks = [w for w in text.lower().split(" ") if w]
+    return [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
+
+
 def _shingle_batch(batch, n: int):
-    """Shingle one ``(doc_id, text)`` Arrow batch: lower, split on ' ',
-    drop empty tokens, ``' '``-joined word n-grams, distinct in
-    first-occurrence order — the semantics the d_ngram_jaccard DuckDB
-    oracle pins.  Documents with no shingle (NULL, or fewer than ``n``
-    tokens) are dropped here, not by a later filter.
+    """Shingle one ``(doc_id, text)`` Arrow batch: the distinct
+    :func:`_word_ngrams` of each text, in first-occurrence order.
+    Documents with no shingle (NULL, or fewer than ``n`` tokens) are
+    dropped here, not by a later filter.
 
     Returns the kept ``(doc_id, shingles)`` as Arrow arrays."""
     import pyarrow as pa
@@ -138,14 +149,10 @@ def _shingle_batch(batch, n: int):
     offsets = [0]
     flat: list = []
     for i, t in enumerate(batch.column(1).to_pylist()):
-        if t is None:
+        grams = _word_ngrams(t, n)
+        if not grams:
             continue
-        toks = [w for w in t.lower().split(" ") if w]
-        if len(toks) < n:
-            continue
-        flat.extend(
-            dict.fromkeys(" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1))
-        )
+        flat.extend(dict.fromkeys(grams))
         keep.append(i)
         offsets.append(len(flat))
     return (
@@ -561,15 +568,15 @@ def near_duplicates(
 def simhash(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """64-bit SimHash over word n-gram shingle features, one Arrow-batched
-    UDF from text to signature: tokenize/shingle (same semantics the
-    d_ngram_jaccard oracle pins), md5-derived 64-bit feature hashes
-    (hashlib — byte-identical to :func:`md5_long_expr` and to the
+    """64-bit SimHash over word n-gram shingle features, one ``mapInArrow``
+    pass from text to signature: the distinct :func:`_word_ngrams` (the
+    semantics the d_ngram_jaccard oracle pins), md5-derived 64-bit
+    feature hashes (hashlib — byte-identical to :func:`md5_long_expr` and to the
     independent fixture oracle in golden/query_fixtures.py), vectorized
     numpy bit votes.  Docs with < n tokens get signature 0 (and therefore
     pair with each other — reference-free but fixture-pinned semantics).
 
-    Single-UDF form chosen by measurement: the earlier JVM shingle +
+    Single-pass form chosen by measurement: the earlier JVM shingle +
     ``transform(md5->conv->decimal)`` expression chain ran interpreted
     (higher-order functions are never codegen'd) and cost ~6 ms/doc;
     this form is ~0.2 ms/doc.  Shingle features (not unigrams) keep the
@@ -583,13 +590,12 @@ def simhash(
     replaces per-shingle ``int.from_bytes``, and ``np.unpackbits`` +
     a single int32 row-sum replace the uint64 broadcast shift (measured
     7x faster than the shift for the bit matrix; ~17% off the whole
-    UDF).  Full-batch ``reduceat``/``cumsum`` segment forms were
+    pass).  Full-batch ``reduceat``/``cumsum`` segment forms were
     measured SLOWER than this per-doc loop (0.7-1.4s vs 0.41s for 5k
     docs) and allocate O(batch_shingles x 64) — rejected."""
     import hashlib
 
-    import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
     md5 = hashlib.md5
     # unpackbits is MSB-first per byte, so column k of the bit matrix is
@@ -598,32 +604,29 @@ def simhash(
     # parity with the md5_long_expr / fixture-oracle bit convention
     w_desc = np.uint64(1) << np.arange(63, -1, -1, dtype=np.uint64)
 
-    def _simhash(texts):
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            toks = [w for w in t.lower().split(" ") if w]
-            if len(toks) < n:
-                continue
-            sh = dict.fromkeys(
-                " ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            out = np.zeros(batch.num_rows, dtype=np.uint64)
+            for i, t in enumerate(batch.column(1).to_pylist()):
+                sh = dict.fromkeys(_word_ngrams(t, n))
+                if not sh:
+                    continue
+                buf = b"".join(md5(s.encode("utf-8")).digest() for s in sh)
+                u8 = np.frombuffer(buf, dtype=np.uint8).reshape(-1, 16)[:, :8]
+                bits = np.unpackbits(u8, axis=1)
+                votes = bits.sum(axis=0, dtype=np.int32) * 2 - len(sh)
+                out[i] = ((votes > 0).astype(np.uint64) * w_desc).sum(dtype=np.uint64)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(out.view(np.int64))],
+                names=["doc_id", "simhash"],
             )
-            buf = b"".join(md5(s.encode("utf-8")).digest() for s in sh)
-            u8 = np.frombuffer(buf, dtype=np.uint8).reshape(-1, 16)[:, :8]
-            bits = np.unpackbits(u8, axis=1)
-            votes = bits.sum(axis=0, dtype=np.int32) * 2 - len(sh)
-            sig = ((votes > 0).astype(np.uint64) * w_desc).sum(dtype=np.uint64)
-            out[i] = sig.astype(np.int64)
-        return pd.Series(out)
 
-    _simhash.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    _simhash = F.pandas_udf(_simhash, "long")
-
-    slim = _parallelize_for_udf(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-    )
-    return slim.select("doc_id", _simhash(F.col("_t")).alias("simhash"))
+    slim = _slim(docs, id_col, text_col)
+    return slim.mapInArrow(run, StructType(
+        [slim.schema["doc_id"], StructField("simhash", LongType())]
+    ))
 
 
 def simhash_near_pairs(
@@ -639,7 +642,7 @@ def simhash_near_pairs(
     The signature frame is persisted (tracked — see
     :mod:`markmuse_spark.plans.cache`): BOTH sides of the band self-join
     read it, and Spark shares no subplans across self-joins, so without
-    the persist the simhash UDF runs twice over the corpus (measured
+    the persist the simhash pass runs twice over the corpus (measured
     ~0.7 s per extra pass at sf0.1 — the same double-compute minhash_lsh
     fixed in round 3)."""
     from markmuse_spark.plans.cache import tracked_persist

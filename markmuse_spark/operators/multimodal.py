@@ -209,16 +209,6 @@ def image_metadata(frames: DataFrame, id_col: str, bin_col: str) -> DataFrame:
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def _png_paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def decode_png_pixels(data):
     """REAL PNG pixel decode from raw bytes — no image library: chunk
     walk, concatenated-IDAT ``zlib.decompress``, per-scanline reversal
@@ -238,6 +228,8 @@ def decode_png_pixels(data):
     (:data:`_PIL_Image`) remains the production path for megapixel
     decode throughput."""
     import numpy as np
+
+    from markmuse_spark.kernel.pdf_extract import _png_paeth_pred
 
     data = bytes(data)
     if len(data) < 33 or data[:8] != b"\x89PNG\r\n\x1a\n":
@@ -311,7 +303,7 @@ def decode_png_pixels(data):
                 left = rb[i - bpp] if i >= bpp else 0
                 up = int(prev[i])
                 ul = int(prev[i - bpp]) if i >= bpp else 0
-                rb[i] = (row[i] + _png_paeth(left, up, ul)) & 0xFF
+                rb[i] = (row[i] + _png_paeth_pred(left, up, ul)) & 0xFF
             rec = np.frombuffer(bytes(rb), dtype=np.uint8)
         else:
             raise ValueError(f"bad filter type {ft}")
@@ -535,39 +527,43 @@ def extract_image_features(
     (md5-seeded unit vector, ``dim`` wide): their codecs are absent in
     this sandbox, and the fake keeps the binary->array<float> plumbing
     exercised end-to-end — swap the seam for a real codec on a cluster
-    that ships one."""
+    that ships one.
+
+    One ``mapInArrow`` pass carries ``id_col`` through and appends
+    ``features``."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
 
     _decoders = {"png": decode_png_pixels, "gif": decode_gif_pixels}
 
-    def _feat(blobs):
-        out = []
-        for data in blobs:
-            if data is None:
-                out.append(None)
-                continue
-            data = bytes(data)
-            dec = _decoders.get(sniff_format(data))
-            if dec is not None:
-                try:
-                    out.append(image_feature_vector(dec(data)))
-                except ValueError:
-                    out.append(None)  # corrupt/unsupported: loud null
-                continue
-            digest = hashlib.md5(data).digest()  # labeled fake (non-PNG)
-            seed = int.from_bytes(digest[:8], "big")
-            rng = np.random.default_rng(seed)
-            vec = rng.standard_normal(dim)
-            out.append((vec / np.linalg.norm(vec)).astype(np.float32).tolist())
-        return pd.Series(out)
+    def _feat(data):
+        if data is None:
+            return None
+        dec = _decoders.get(sniff_format(data))
+        if dec is not None:
+            try:
+                return image_feature_vector(dec(data))
+            except ValueError:
+                return None  # corrupt/unsupported: loud null
+        digest = hashlib.md5(data).digest()  # labeled fake (non-PNG)
+        rng = np.random.default_rng(int.from_bytes(digest[:8], "big"))
+        vec = rng.standard_normal(dim)
+        return (vec / np.linalg.norm(vec)).astype(np.float32).tolist()
 
-    _feat.__annotations__ = {"blobs": pd.Series, "return": pd.Series}
-    _feat = F.pandas_udf(_feat, "array<float>")
+    def run(batches):
+        import pyarrow as pa
 
-    return frames.select(
-        F.col(id_col), _feat(F.col(bin_col)).alias("features")
-    )
+        for batch in batches:
+            feats = [_feat(b) for b in batch.column(1).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(feats, pa.list_(pa.float32()))],
+                names=[id_col, "features"],
+            )
+
+    slim = frames.select(F.col(id_col), F.col(bin_col))
+    return slim.mapInArrow(run, StructType(
+        [slim.schema[id_col], StructField("features", ArrayType(FloatType()))]
+    ))
 
 
 def sample_video_frames(

@@ -4,11 +4,12 @@
   All math is JVM-side (``zip_with`` + ``aggregate`` sequential double
   fold) so results are bit-stable and oracle-comparable.
 * :func:`lsh_bucketed_topk` — the scale path: deterministic random-
-  hyperplane signatures (seeded numpy planes broadcast to executors,
-  vectorized matmul in a pandas UDF), candidates from the query's bucket
-  within a Hamming radius, exact cosine re-rank of candidates only.
-  At 10^12 vectors the bucket join touches a tiny candidate set instead
-  of every row; brute force stays as the ground truth / small-side path.
+  hyperplane signatures (seeded numpy planes derived on each task,
+  vectorized matmul in one ``mapInArrow`` pass), candidates from the
+  query's bucket within a Hamming radius, exact cosine re-rank of
+  candidates only.  At 10^12 vectors the bucket join touches a tiny
+  candidate set instead of every row; brute force stays as the ground
+  truth / small-side path.
 * :func:`embedding_near_pairs` — all-pairs near-duplicate detection by
   cosine (embedding-space dedup), exact via self-join; at scale the same
   LSH bucketing bounds the pair space.
@@ -358,68 +359,73 @@ def lsh_signatures(
     dim: int | None = None,
 ) -> DataFrame:
     """Multi-table random-hyperplane LSH signatures (``array<long>``, one
-    bucket id per table).
+    bucket id per table), in one ``mapInArrow`` pass that carries
+    ``id_col`` and ``vec_col`` through unchanged.
 
     Planes are a seeded numpy ``(dim, n_tables*n_planes)`` matrix built
-    INSIDE the UDF: generation is a pure function of ``(seed, dim)``,
-    so every batch on every executor derives the identical matrix —
-    vectors of any width work without caller plumbing.  ``dim`` is
-    resolved up front (from the caller, else self-pinned via
-    :func:`_vec_dim`) and EVERY batch is checked against it, so a
+    once per task: generation is a pure function of ``(seed, dim)``, so
+    every task on every executor derives the identical matrix.  ``dim``
+    is resolved up front (from the caller, else self-pinned via
+    :func:`_vec_dim`) and EVERY vector is checked against it, so a
     ragged-width frame fails fast instead of hashing different widths
     into incompatible plane spaces.  All signatures come from one
-    vectorized matmul per Arrow batch — no per-row Python.  Multiple
+    vectorized matmul per Arrow batch over the vectors' own element
+    dtype — no per-row Python.  A NULL vector gets NULL ``buckets``:
+    it explodes to no bucket row and is never a candidate, as its NULL
+    cosine never passes the brute-force forms' thresholds.  Multiple
     independent tables are the standard recall amplifier (OR over
     tables) when neighbor cosines are modest."""
-    import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     if dim is None:
         # self-pin: one tiny driver-side action resolves the frame's
-        # width from its first non-null vector, and every batch on every
+        # width from its first non-null vector, and every vector on every
         # executor is then checked against it — a GLOBAL raggedness
         # guard (an earlier per-task closure memory missed widths that
         # split cleanly across partitions).  Returns None only for a
-        # frame with no non-null vectors, whose batches are all empty
-        # anyway.  Callers that already resolved a width (every
-        # multi-input operator) pass dim and skip the action.
+        # frame with no non-null vectors, whose buckets are all NULL.
+        # Callers that already resolved a width (every multi-input
+        # operator) pass dim and skip the action.
         dim = _vec_dim(vectors, vec_col)
 
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-    plane_cache: dict[int, "np.ndarray"] = {}
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
 
-    def _planes(d: int):
-        p = plane_cache.get(d)
-        if p is None:
-            rng = np.random.default_rng(seed)
-            p = plane_cache[d] = rng.standard_normal((d, n_tables * n_planes))
-        return p
-
-    def _sig(vecs):
-        if len(vecs) == 0:  # empty Arrow batch: nothing to infer from
-            return pd.Series([], dtype=object)
-        mat = np.vstack(vecs.to_numpy())  # (batch, dim)
-        if dim is not None and mat.shape[1] != dim:
-            raise ValueError(
-                f"expected {dim}-dim vectors, got {mat.shape[1]}"
+        d = dim or 0  # no width: every vector is NULL
+        planes = np.random.default_rng(seed).standard_normal((d, n_tables * n_planes))
+        weights = (1 << np.arange(n_planes)).astype(np.int64)
+        for batch in batches:
+            vecs = batch.column(1)
+            live = vecs.drop_null()
+            widths = live.value_lengths().to_numpy()
+            if (widths != d).any():
+                raise ValueError(
+                    f"expected {dim}-dim vectors, got {widths[widths != d][0]}"
+                )
+            mat = live.flatten().to_numpy(zero_copy_only=False).reshape(len(live), d)
+            bits = (mat @ planes) > 0  # (live, tables*planes)
+            per_table = bits.reshape(len(live), n_tables, n_planes) @ weights
+            ok = vecs.is_valid().to_numpy(zero_copy_only=False)
+            offsets = np.zeros(len(vecs) + 1, dtype=np.int32)
+            np.cumsum(ok * n_tables, out=offsets[1:])
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), vecs, pa.ListArray.from_arrays(
+                    pa.array(offsets), pa.array(per_table.ravel()), mask=pa.array(~ok)
+                )],
+                names=[id_col, vec_col, "buckets"],
             )
-        bits = (mat @ _planes(mat.shape[1])) > 0  # (batch, tables*planes)
-        per_table = bits.reshape(len(mat), n_tables, n_planes) @ weights
-        return pd.Series(list(per_table.astype(np.int64)))
-
-    # real-object annotations: postponed (string) annotations defeat
-    # pandas_udf signature inference
-    _sig.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    _sig = F.pandas_udf(_sig, "array<long>")
 
     from markmuse_spark.operators.dedup import _parallelize_for_udf
 
-    # same narrow-scan guard as the text UDFs: a small parquet input is
-    # one scan partition and would run the matmul UDF on one core
+    # same narrow-scan guard as the text passes: a small parquet input is
+    # one scan partition and would run the matmul on one core
     wide = _parallelize_for_udf(vectors.select(F.col(id_col), F.col(vec_col)))
-    return wide.select(
-        F.col(id_col), F.col(vec_col), _sig(F.col(vec_col)).alias("buckets")
-    )
+    return wide.mapInArrow(run, StructType([
+        wide.schema[id_col],
+        wide.schema[vec_col],
+        StructField("buckets", ArrayType(LongType())),
+    ]))
 
 
 def lsh_bucketed_topk(
@@ -745,7 +751,7 @@ def lsh_pair_candidates(
     sigs = lsh_signatures(vectors, n_tables, n_planes, seed, id_col, vec_col, dim)
     # both sides of the self-join read the exploded bucket frame, and
     # Spark shares no subplans across self-joins: persist (tracked) so
-    # the signature UDF + explode run once, not per side
+    # the signature pass + explode run once, not per side
     from markmuse_spark.plans.cache import tracked_persist
 
     b = tracked_persist(

@@ -662,35 +662,38 @@ def _hits(lang):
     return F.size(F.filter(_tokens(), lambda x: x.isin(*_STOP[lang])))
 
 
-def _ngrams_udf(n: int):
-    """Arrow-batched word n-gram array UDF: lower, split on ' ', drop
-    empties, ``' '``-joined n-grams, ``[]`` under ``n`` tokens, NULL text
-    -> ``[]`` — the parity the t_repetition DuckDB oracle pins every run.
-    It replaced a JVM ``transform``/``element_at`` form whose lambda
-    re-evaluated the captured tokens expression per element in Spark's
-    interpreted HOF evaluator, O(tokens^2) per document (round 8: 19.0 s
-    for t_repetition at sf0.1, ~1 s with this UDF).
-    Python-side token semantics match ``operators.dedup._shingled``,
-    whose oracle parity is long established on these tables."""
-    import pandas as pd
+def _ngram_lists(frame: DataFrame, **ns: int) -> DataFrame:
+    """``(doc_id, <name>...)`` in one ``mapInArrow`` pass over
+    ``frame``'s ``(doc_id, text)``: for each ``name=n``, the word
+    n-grams of ``text`` as ``array<string>`` (repeats kept, ``[]`` under
+    ``n`` tokens or for NULL text) from
+    :func:`~markmuse_spark.operators.dedup._word_ngrams`, the tokenizer
+    the d_ngram_jaccard and t_repetition DuckDB oracles pin.  It replaced a JVM
+    ``transform``/``element_at`` form whose lambda re-evaluated the
+    captured tokens expression per element in Spark's interpreted HOF
+    evaluator, O(tokens^2) per document (round 8: 19.0 s for
+    t_repetition at sf0.1, ~1 s as a Python pass)."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    def _mk(texts):
-        out = []
-        for tx in texts:
-            toks = [w for w in (tx or "").lower().split(" ") if w]
-            if len(toks) < n:
-                out.append([])
-            else:
-                out.append(
-                    [
-                        " ".join(toks[i : i + n])
-                        for i in range(len(toks) - n + 1)
-                    ]
-                )
-        return pd.Series(out)
+    from markmuse_spark.operators.dedup import _word_ngrams
 
-    _mk.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_mk, "array<string>")
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            texts = batch.column(1).to_pylist()
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0)] + [
+                    pa.array([_word_ngrams(t, n) for t in texts], pa.list_(pa.string()))
+                    for n in ns.values()
+                ],
+                names=["doc_id", *ns],
+            )
+
+    slim = frame.select("doc_id", "text")
+    return slim.mapInArrow(run, StructType([slim.schema["doc_id"]] + [
+        StructField(name, ArrayType(StringType())) for name in ns
+    ]))
 
 
 def _quality_exprs():
@@ -1004,16 +1007,13 @@ def t_repetition(spark, sf_dir):
 
     # persisted: two plan branches read it (the bigram explode and the
     # final join's trigram side) and Spark shares no subplans across
-    # self-joins — without the persist the n-gram UDFs run twice
-    base = tracked_persist(
+    # self-joins — without the persist the n-gram pass runs twice
+    base = tracked_persist(_ngram_lists(
         _parallelize_for_udf(
             _t(spark, sf_dir, "documents").select("doc_id", "text")
-        ).select(
-            "doc_id",
-            _ngrams_udf(2)(F.col("text")).alias("bgs"),
-            _ngrams_udf(3)(F.col("text")).alias("tgs"),
-        )
-    )
+        ),
+        bgs=2, tgs=3,
+    ))
     counts = (
         base.select("doc_id", F.explode("bgs").alias("g"))
         .groupBy("doc_id", "g")
@@ -1075,7 +1075,7 @@ def p_curation_keeplist(spark, sf_dir):
     expressed over the shared base so the fingerprint computes once).
 
     Every stage reuses the SHARED expression helper its standalone
-    operator uses (``_lang_expr``/``_quality_exprs``/``_ngrams_udf``/
+    operator uses (``_lang_expr``/``_quality_exprs``/``_ngram_lists``/
     ``normalized_fingerprint``) — the composed pipeline cannot drift from
     the operators it composes.  Scale shape: ONE scan computes the
     per-doc columns into ``base``, which is persisted because THREE plan
@@ -1121,7 +1121,7 @@ def p_curation_keeplist(spark, sf_dir):
         )
     )
     rep = (
-        base.select("doc_id", F.explode(_ngrams_udf(2)(F.col("text"))).alias("g"))
+        _ngram_lists(base, g=2).select("doc_id", F.explode("g").alias("g"))
         .groupBy("doc_id", "g")
         .count()
         .groupBy("doc_id")
@@ -1896,7 +1896,7 @@ def m_image_features(spark, sf_dir):
     (PNG: zlib + scanline filter reversal; GIF: variable-width LZW +
     palette — operators/multimodal.py) feeding the 16-float
     exact-arithmetic feature layout."""
-    import pandas as pd
+    from pyspark.sql.types import BinaryType, StructField, StructType
 
     from markmuse_spark.operators.multimodal import extract_image_features
     from markmuse_spark.sources.gif_writer import (
@@ -1906,22 +1906,30 @@ def m_image_features(spark, sf_dir):
         encode_png, png_pixel_spec, spec_filters,
     )
 
-    def _png(ids, texts):
-        out = []
-        for i, t in zip(ids, texts):
-            i = int(i)
-            if i % 5 == 2:
-                out.append(encode_gif(gif_palette(i), gif_index_spec(i, t)))
-            else:
-                px = png_pixel_spec(i, t)
-                out.append(encode_png(px, filters=spec_filters(i, px.shape[0])))
-        return pd.Series(out)
+    def _encode(i, t):
+        if i % 5 == 2:
+            return encode_gif(gif_palette(i), gif_index_spec(i, t))
+        px = png_pixel_spec(i, t)
+        return encode_png(px, filters=spec_filters(i, px.shape[0]))
 
-    _png.__annotations__ = {"ids": pd.Series, "texts": pd.Series, "return": pd.Series}
-    _png = F.pandas_udf(_png, "binary")
+    def _media(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            payload = [
+                _encode(i, t)
+                for i, t in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist())
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(payload, pa.binary())],
+                names=["doc_id", "payload"],
+            )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    media = d.select("doc_id", _png(F.col("doc_id"), F.col("text")).alias("payload"))
+    d = d.select("doc_id", "text")
+    media = d.mapInArrow(_media, StructType(
+        [d.schema["doc_id"], StructField("payload", BinaryType())]
+    ))
     feats = extract_image_features(media, "doc_id", "payload")
 
     def fcol(idx, name):

@@ -3,6 +3,8 @@ exact counterparts on the sf0.01 tables (which contain planted near-dups)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -470,6 +472,31 @@ def test_vec_dim_skips_leading_null(spark):
     assert sim._vec_dim(empty, "embedding") is None
 
 
+def test_lsh_null_embedding_is_never_a_candidate(spark):
+    """A NULL vector gets NULL buckets and pairs with nothing — the same
+    as its NULL cosine in the brute-force forms — and does not fail the
+    Arrow batch it shares with non-null vectors."""
+    from markmuse_spark.operators import similarity as sim
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.5, 0.2]), (1, None), (2, [0.9, 0.1, 0.5, 0.2])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    sigs = {r["vec_id"]: r["buckets"] for r in sim.lsh_signatures(df).collect()}
+    assert sigs[1] is None and len(sigs[0]) == len(sigs[2]) == 8
+    exact = {
+        (r["id_a"], r["id_b"])
+        for r in sim.embedding_near_pairs(df, threshold=0.9).collect()
+    }
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in sim.embedding_near_pairs_lsh(df, threshold=0.9).collect()
+    }
+    assert got == exact == {(0, 2)}
+    top = sim.lsh_bucketed_topk(df, 0, k=2, n_tables=32, n_planes=4).collect()
+    assert [r["vec_id"] for r in top] == [2]
+
+
 def test_lsh_signatures_ragged_width_raises(spark):
     """With dim unset, lsh_signatures self-pins the frame's width from
     its first non-null vector and every batch is checked against it —
@@ -860,3 +887,64 @@ def test_ivf_batch_matches_single_probes(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="vec"):
         ivf_batch_topk(assigned, cents, emb.select("vec_id"), k=5)
+
+
+def _docs(spark):
+    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+
+def _python_nodes(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(
+        r"(?:ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas)\b", plan
+    )
+
+
+def _simhash(spark):
+    from markmuse_spark.operators.dedup import simhash
+
+    return simhash(_docs(spark)).filter(F.col("simhash") != 0), 1
+
+
+def _lsh_signatures(spark):
+    from markmuse_spark.operators.similarity import lsh_signatures
+
+    vecs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    return lsh_signatures(vecs).filter(F.size("buckets") > 0), 1
+
+
+def _image_features(spark):
+    from markmuse_spark.operators.multimodal import extract_image_features
+
+    media = spark.createDataFrame(
+        [(0, b"\x89PNG\r\n\x1a\n"), (1, b"GIF89a"), (2, None)],
+        "media_id long, payload binary",
+    )
+    feats = extract_image_features(media, "media_id", "payload")
+    return feats.filter(F.col("features").isNotNull()), 1
+
+
+def _ngram_lists(spark):
+    from markmuse_spark.queries import _ngram_lists
+
+    return _ngram_lists(_docs(spark), g=2).filter(F.size("g") > 0), 1
+
+
+def _m_image_features(spark):
+    from markmuse_spark.queries import m_image_features
+
+    # two passes: the payload encoder and the feature extractor
+    return m_image_features(spark, SF_DIR).filter(F.col("dim") > 0), 2
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_simhash, _lsh_signatures, _image_features, _ngram_lists, _m_image_features],
+    ids=lambda b: b.__name__.lstrip("_"),
+)
+def test_filter_on_pass_output_runs_each_pass_once(spark, build):
+    """A filter on a pass's output stays above its one ``MapInArrow``
+    node, so no pass is evaluated twice (a filter on a scalar UDF's
+    output pushed below its projection re-evaluates the UDF)."""
+    df, n_passes = build(spark)
+    assert _python_nodes(df) == ["MapInArrow"] * n_passes
